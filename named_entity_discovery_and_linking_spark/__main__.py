@@ -23,6 +23,24 @@ import os
 import sys
 
 
+def _load_kb(spark, args):
+    """(kb, aliases) frames from ``--kb``/``--aliases``, or the fixture KB
+    when ``--kb`` is not given; ``--kb`` without ``--aliases`` has no
+    aliases."""
+    if not args.kb:
+        from .fixtures.generator import kb_dfs
+
+        return kb_dfs(spark)
+    from .sources.kb_tsv import load_aliases_tab, load_entities_tab
+
+    aliases = (
+        load_aliases_tab(spark, args.aliases)
+        if args.aliases
+        else spark.createDataFrame([], "eid string, alias string")
+    )
+    return load_entities_tab(spark, args.kb), aliases
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser(prog="named_entity_discovery_and_linking_spark")
     ap.add_argument("--run-csr", dest="run_csr", action="store_true",
@@ -118,19 +136,7 @@ def main(argv=None):
     if args.query or args.map_file:
         from .operators.linking import audit_map_file, query_kb
 
-        if args.kb:
-            from .sources.kb_tsv import load_aliases_tab, load_entities_tab
-
-            kb = load_entities_tab(spark, args.kb)
-            aliases = (
-                load_aliases_tab(spark, args.aliases)
-                if args.aliases
-                else spark.createDataFrame([], "eid string, alias string")
-            )
-        else:
-            from .fixtures.generator import kb_dfs
-
-            kb, aliases = kb_dfs(spark)
+        kb, aliases = _load_kb(spark, args)
         if args.query:
             out = query_kb(spark, kb, aliases, [tuple(q) for q in args.query])
         else:
@@ -164,17 +170,7 @@ def main(argv=None):
             ap.error("--run-csr requires --in-dir")
         from .plans.csr import run_csr
 
-        kb = aliases = None
-        if args.kb:
-            from .sources.kb_tsv import load_aliases_tab, load_entities_tab
-
-            kb = load_entities_tab(spark, args.kb)
-            aliases = (
-                load_aliases_tab(spark, args.aliases)
-                if args.aliases
-                else spark.createDataFrame([], "eid string, alias string")
-            )
-        n = run_csr(spark, args.in_dir, args.out, args.lang, kb, aliases)
+        n = run_csr(spark, args.in_dir, args.out, args.lang, *_load_kb(spark, args))
         print(f"done: {n} CSR files -> {args.out}")
         return 0
 
@@ -237,19 +233,7 @@ def main(argv=None):
                      "file source watches)")
         from .streaming.stream_mentions import stream_triples
 
-        if args.kb:
-            from .sources.kb_tsv import load_aliases_tab, load_entities_tab
-
-            kb = load_entities_tab(spark, args.kb)
-            aliases = (
-                load_aliases_tab(spark, args.aliases)
-                if args.aliases
-                else spark.createDataFrame([], "eid string, alias string")
-            )
-        else:
-            from .fixtures.generator import kb_dfs
-
-            kb, aliases = kb_dfs(spark)
+        kb, aliases = _load_kb(spark, args)
         stream_triples(
             spark, args.pages, os.path.join(args.out, "triples"),
             os.path.join(args.out, "_stream_checkpoint"), kb, aliases,
@@ -281,19 +265,7 @@ def main(argv=None):
         spark, pages, "mentions", discover_mentions, args.out, lineage_dir, args.buckets
     ).localCheckpoint()
 
-    if args.kb:
-        from .sources.kb_tsv import load_aliases_tab, load_entities_tab
-
-        kb = load_entities_tab(spark, args.kb)
-        aliases = (
-            load_aliases_tab(spark, args.aliases)
-            if args.aliases
-            else spark.createDataFrame([], "eid string, alias string")
-        )
-    else:
-        from .fixtures.generator import kb_dfs
-
-        kb, aliases = kb_dfs(spark)
+    kb, aliases = _load_kb(spark, args)
 
     if args.mentions_json:
         from .sources.json_compat import write_mention_json_dir

@@ -89,12 +89,15 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS,
     edge set falls through to the distributed loop without ever
     materializing on the driver.
     """
+    # endpoints by name, and no edge with a NULL endpoint: both paths below
+    # see the same edge set
+    edges = edges.select("src", "dst").dropna()
     if driver_max_edges is not None:
         probe = edges.limit(driver_max_edges + 1).collect()
         if len(probe) <= driver_max_edges:
             spark = edges.sparkSession
-            comp = _driver_union_find((r[0], r[1]) for r in probe)
-            src_type = edges.schema[0].dataType
+            comp = _driver_union_find((r["src"], r["dst"]) for r in probe)
+            src_type = edges.schema["src"].dataType
             from pyspark.sql.types import StructField, StructType
 
             schema = StructType([

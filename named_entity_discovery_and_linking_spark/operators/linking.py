@@ -50,6 +50,22 @@ MAX_FUZZY_DIST = 2
 FUZZY_BROADCAST_MAX_ALIASES = 200_000
 
 
+def _tokens(col: str) -> "F.Column":
+    """StandardAnalyzer-style tokens of a lower-cased string column: split on
+    non-alphanumerics, drop the empty strings the split leaves behind."""
+    return F.expr(rf"filter(split({col}, '[^\\p{{L}}\\p{{N}}]+'), t -> t != '')")
+
+
+def _type_gate(type_col: str) -> "F.Column":
+    """F6 type-compat gate (linking.py:151-159) of a query's ``ent_type``
+    against a KB type column."""
+    return (
+        (F.col("ent_type").isin("GPE", "LOC", "FAC") & F.col(type_col).isin("GPE", "LOC"))
+        | ((F.col("ent_type") == "ORG") & (F.col(type_col) == "ORG"))
+        | ((F.col("ent_type") == "PER") & (F.col(type_col) == "PER"))
+    )
+
+
 # ------------------------------------------------------------------ KB prep
 
 def clean_kb(kb: DataFrame) -> DataFrame:
@@ -135,7 +151,7 @@ def build_alias_table(kb_clean: DataFrame, aliases: DataFrame) -> DataFrame:
         .withColumn("info", info)
         .withColumn("info_nfields", nfields)
         .withColumn("name_norm", F.lower(F.col("cand_name")))
-        .withColumn("tokens", F.expr(r"filter(split(lower(cand_name), '[^\\p{L}\\p{N}]+'), t -> t != '')"))
+        .withColumn("tokens", _tokens("lower(cand_name)"))
         .withColumn("n_tokens", F.size("tokens"))
     )
 
@@ -193,7 +209,7 @@ def _nam_queries(mentions: DataFrame) -> DataFrame:
                 F.array_distinct(F.split(F.col("sent_text"), r"\s+")), ""
             ).alias("ctx_tokens"),
         )
-        .withColumn("q_tokens", F.expr(r"array_distinct(filter(split(ent_name, '[^\\p{L}\\p{N}]+'), t -> t != ''))"))
+        .withColumn("q_tokens", F.array_distinct(_tokens("ent_name")))
         .withColumn("n_q", F.size("q_tokens"))
         .filter(F.col("n_q") > 0)
     )
@@ -306,22 +322,12 @@ def generate_candidates_unified(queries: DataFrame, alias_table: DataFrame,
         "alias_id", F.col("cand_type").alias("a_type"), "n_tokens",
         F.explode(F.array_distinct("tokens")).alias("a_tok"),
     )
-    # F6 type-compat predicates (linking.py:151-159): a_gate over the token
-    # index's a_type (used only to pick the fuzzy winning dist — the
-    # reference stops at the first dist whose GATED set is non-empty), and
-    # a_gate_cand over _cap's rejoined cand_type.  Neither is applied to the
-    # EMITTED candidate set: retrieval is ungated and score_candidates owns
-    # the gate, as in the reference.
-    a_gate = (
-        (F.col("ent_type").isin("GPE", "LOC", "FAC") & F.col("a_type").isin("GPE", "LOC"))
-        | ((F.col("ent_type") == "ORG") & (F.col("a_type") == "ORG"))
-        | ((F.col("ent_type") == "PER") & (F.col("a_type") == "PER"))
-    )
-    a_gate_cand = (
-        (F.col("ent_type").isin("GPE", "LOC", "FAC") & F.col("cand_type").isin("GPE", "LOC"))
-        | ((F.col("ent_type") == "ORG") & (F.col("cand_type") == "ORG"))
-        | ((F.col("ent_type") == "PER") & (F.col("cand_type") == "PER"))
-    )
+    # The F6 type gate is used here only to pick the exact/fuzzy fallthrough
+    # and the fuzzy winning dist (the reference stops at the first dist whose
+    # GATED set is non-empty) — over _cap's rejoined cand_type and over the
+    # token index's a_type.  It is never applied to the EMITTED candidate
+    # set: retrieval is ungated and score_candidates owns the gate, as in
+    # the reference.
 
     def _cap(gated):
         """top-100 per mention + attribute rejoin.  Applied ONCE, after the
@@ -373,7 +379,7 @@ def generate_candidates_unified(queries: DataFrame, alias_table: DataFrame,
     exact_gated_mids = (
         _cap(exact)
         .join(queries.select("mid", "ent_type"), "mid")
-        .filter(a_gate_cand)
+        .filter(_type_gate("cand_type"))
         .select("mid")
         .distinct()
     )
@@ -430,7 +436,7 @@ def generate_candidates_unified(queries: DataFrame, alias_table: DataFrame,
     w_m = Window.partitionBy("mid")
     fuzzy = (
         fuzzy.join(ent_types, "mid")
-        .withColumn("gated_d", F.when(a_gate, F.col("d_star")))
+        .withColumn("gated_d", F.when(_type_gate("a_type"), F.col("d_star")))
         .withColumn("d_min", F.min("gated_d").over(w_m))
         .filter(F.col("d_star") <= F.col("d_min"))
         .drop("gated_d", "d_min", "ent_type", "a_type")
@@ -460,13 +466,7 @@ def score_candidates(cands: DataFrame, queries: DataFrame) -> DataFrame:
     doubled the shuffle bytes at bench scale — disambiguate joins it last.
     """
     df = cands.join(queries.select("url", "mid", "ent_name", "ent_type"), "mid")
-    # F6 type-compat gate (linking.py:151-159)
-    gate = (
-        (F.col("ent_type").isin("GPE", "LOC", "FAC") & F.col("cand_type").isin("GPE", "LOC"))
-        | ((F.col("ent_type") == "ORG") & (F.col("cand_type") == "ORG"))
-        | ((F.col("ent_type") == "PER") & (F.col("cand_type") == "PER"))
-    )
-    df = df.filter(gate)
+    df = df.filter(_type_gate("cand_type"))
     # F7 id dedup: first occurrence in retrieval order wins (linking.py:161-169)
     w_id = Window.partitionBy("mid", "eid").orderBy("lucene_rank")
     df = df.withColumn("_rid", F.row_number().over(w_id)).filter(F.col("_rid") == 1).drop("_rid")
@@ -581,14 +581,13 @@ def tmpkb_lookup(nil_queries: DataFrame, tmpkb: DataFrame) -> DataFrame:
     Tokens are derived from ent_name here (same tokenizer family as the
     StandardAnalyzer: split on non-alphanumerics, drop empties), so callers
     need only (url, mid, ent_name, ent_type)."""
-    tok_expr = r"array_distinct(filter(split({col}, '[^\\p{{L}}\\p{{N}}]+'), t -> t != ''))"
     names = tmpkb.select(
         "tmp_eid", "name", "type",
-        F.explode(F.expr(tok_expr.format(col="lower(name)"))).alias("n_tok"),
+        F.explode(F.array_distinct(_tokens("lower(name)"))).alias("n_tok"),
     )
     q = nil_queries.select(
         "url", "mid", "ent_name", "ent_type",
-        F.explode(F.expr(tok_expr.format(col="ent_name"))).alias("q_tok"),
+        F.explode(F.array_distinct(_tokens("ent_name"))).alias("q_tok"),
     ).withColumn("n_q", F.count("*").over(Window.partitionBy("mid")))
     hits = (
         q.join(
@@ -624,6 +623,56 @@ def tmpkb_lookup(nil_queries: DataFrame, tmpkb: DataFrame) -> DataFrame:
 
 # ------------------------------------------------------------------ full E2 plan
 
+def _rank(queries: DataFrame, alias_table: DataFrame,
+          broadcast_index: bool | None = None) -> DataFrame:
+    """Exact retrieval with the fuzzy retry, the F6 gate and rule scores,
+    then disambiguation: every gated KB candidate of every query, ranked by
+    normalized confidence."""
+    cands = generate_candidates_unified(queries, alias_table, MAX_FUZZY_DIST,
+                                        broadcast_index=broadcast_index)
+    return disambiguate(score_candidates(cands, queries), queries)
+
+
+def _kb_phase(queries: DataFrame, alias_table: DataFrame,
+              broadcast_index: bool | None = None) -> DataFrame:
+    """KB phase of E2: the ranked candidates as ``refkb:`` links
+    (subcomponent 0).  Each query is linked independently of the others, so
+    the phase may run on any subset of ``queries``."""
+    return _rank(queries, alias_table, broadcast_index).select(
+        "url", "mid",
+        F.concat(F.lit("refkb:"), F.col("eid")).alias("eid"),
+        "cname", "confidence", "rank",
+        F.lit(0).alias("subcomponent"),
+    )
+
+
+def _nil_tail(queries: DataFrame, kb_links: DataFrame, promote: bool = True) -> DataFrame:
+    """NIL tail of E2 (linking.py:442-479): tmp-KB links (subcomponent 1)
+    for the queries the KB phase left without a link.
+
+    Promotion order matches the reference (linking.py:466-475): NILs are
+    looked up against the SEEDED tmp KB first, and only mentions that
+    lookup cannot resolve count toward the >=5 promotion — otherwise a
+    seeded name would be registered twice and split its confidence.  The
+    count runs over the whole corpus (DEVIATIONS #14), so this tail is
+    global, unlike the KB phase."""
+    nil_queries = queries.join(kb_links.select("mid").distinct(), "mid", "left_anti")
+    seed = tmpkb_seed(queries.sparkSession)
+    # the reference counts toward promotion only mentions STILL 'none' after
+    # the tmpkb query (linking.py:466-470) — i.e. exclude every mention the
+    # token-AND lookup retrieves, not just exact name matches
+    seed_hit_mids = tmpkb_lookup(nil_queries, seed).select("mid").distinct()
+    unresolved = nil_queries.join(seed_hit_mids, "mid", "left_anti")
+    # ``promote=False`` = the --run_csr flavor: NILs are looked up against
+    # the tmp KB but never count-promoted (linking.py:579-607 has no
+    # null_counter; registration happens only via cluster election, A3).
+    # A mention may retrieve BOTH a seed entry and a promoted one (Lucene
+    # searches the whole tmp index); the per-mention normalization splits
+    # confidence across them, as the reference's confsum does.
+    tmpkb = seed.unionByName(promote_nils(unresolved)) if promote else seed
+    return tmpkb_lookup(nil_queries, tmpkb)
+
+
 def link_mentions(mentions: DataFrame, kb: DataFrame, aliases: DataFrame,
                   promote: bool = True,
                   broadcast_index: bool | None = None,
@@ -637,11 +686,8 @@ def link_mentions(mentions: DataFrame, kb: DataFrame, aliases: DataFrame,
     Two-phase NIL handling mirrors linking.py:309-336 + 442-479: fuzzy
     retries run only for mentions the exact pass left empty, with per-dist
     budget min(2, len(name)//5) (effective Lucene budget — see
-    MAX_FUZZY_DIST); the temporary-KB pass runs only on what is still NIL
-    after that.  Promotion order matches the reference (linking.py:466-475):
-    NILs are looked up against the SEEDED tmp KB first, and only mentions
-    that lookup cannot resolve count toward the >=5 promotion — otherwise a
-    seeded name would be registered twice and split its confidence.
+    MAX_FUZZY_DIST); the temporary-KB pass (``_nil_tail``) runs only on
+    what is still NIL after that.
     """
     from ..session import materialize
 
@@ -666,36 +712,32 @@ def link_mentions(mentions: DataFrame, kb: DataFrame, aliases: DataFrame,
     # mentions frame (tests, ad-hoc composition) also stay protected from
     # tagger re-derivation.
     queries = _nam_queries(mentions).localCheckpoint()
+    kb_links = materialize(_kb_phase(queries, alias_table, broadcast_index), "kb_links")
+    return kb_links.unionByName(_nil_tail(queries, kb_links, promote))
 
-    cands = generate_candidates_unified(queries, alias_table, MAX_FUZZY_DIST,
-                                        broadcast_index=broadcast_index)
-    scored = materialize(
-        disambiguate(score_candidates(cands, queries), queries), "scored"
-    )
-    kb_links = scored.select(
-        "url", "mid",
-        F.concat(F.lit("refkb:"), F.col("eid")).alias("eid"),
-        "cname", "confidence", "rank",
-        F.lit(0).alias("subcomponent"),
-    )
 
-    nil_queries = queries.join(scored.select("mid").distinct(), "mid", "left_anti")
-    seed = tmpkb_seed(mentions.sparkSession)
-    # the reference counts toward promotion only mentions STILL 'none' after
-    # the tmpkb query (linking.py:466-470) — i.e. exclude every mention the
-    # token-AND lookup retrieves, not just exact name matches
-    seed_hit_mids = tmpkb_lookup(nil_queries, seed).select("mid").distinct()
-    unresolved = nil_queries.join(seed_hit_mids, "mid", "left_anti")
-    # ``promote=False`` = the --run_csr flavor: NILs are looked up against
-    # the tmp KB but never count-promoted (linking.py:579-607 has no
-    # null_counter; registration happens only via cluster election, A3).
-    # A mention may retrieve BOTH a seed entry and a promoted one (Lucene
-    # searches the whole tmp index); the per-mention normalization splits
-    # confidence across them, as the reference's confsum does.
-    tmpkb = seed.unionByName(promote_nils(unresolved)) if promote else seed
-    tmp_links = tmpkb_lookup(nil_queries, tmpkb)
+def link_mentions_resumable(spark, mentions: DataFrame, kb: DataFrame,
+                            aliases: DataFrame, out_dir: str, lineage_dir: str,
+                            n_buckets: int = 16) -> DataFrame:
+    """``link_mentions`` whose KB phase runs through ``plans.lineage.run_stage``
+    as the bucket-resumable stage ``kb_links``; that is the one difference,
+    and the output is row-identical to ``link_mentions`` on the same inputs.
 
-    return kb_links.unionByName(tmp_links)
+    The KB phase links each query on its own, so it runs on url-hash
+    buckets of the queries: a killed job resumes by skipping completed
+    buckets and overwriting only recomputed partitions.  The NIL tail is
+    global (its promotion counts over the whole corpus), so it is
+    recomputed on every run — an anti-join plus a groupBy over the small
+    NIL remainder, cheap relative to the KB phase.
+    """
+    from ..plans.lineage import run_stage
+
+    alias_table = build_alias_table(clean_kb(kb), aliases).localCheckpoint()
+    queries = _nam_queries(mentions).localCheckpoint()
+    kb_links = run_stage(spark, queries, "kb_links",
+                         lambda q: _kb_phase(q, alias_table),
+                         out_dir, lineage_dir, n_buckets).drop("bucket")
+    return kb_links.unionByName(_nil_tail(queries, kb_links))
 
 
 def query_kb(spark, kb: DataFrame, aliases: DataFrame, queries: list,
@@ -721,9 +763,7 @@ def query_kb(spark, kb: DataFrame, aliases: DataFrame, queries: list,
     )
     kbc = clean_kb(kb)
     alias_table = build_alias_table(kbc, aliases).localCheckpoint()
-    q = _nam_queries(mentions)
-    cands = generate_candidates_unified(q, alias_table, MAX_FUZZY_DIST)
-    ranked = disambiguate(score_candidates(cands, q), q)
+    ranked = _rank(_nam_queries(mentions), alias_table)
     return (
         ranked.join(mentions.select("mid", F.col("mention").alias("q_name"),
                                     F.col("type").alias("q_type")), "mid")
@@ -799,57 +839,3 @@ def query_tmpkb(spark, queries: list, tmpkb: DataFrame | None = None) -> DataFra
         .join(F.broadcast(names), "mid")
         .select("q_name", "q_type", "eid", "cname", "confidence", "rank")
     )
-
-
-def link_mentions_resumable(spark, mentions: DataFrame, kb: DataFrame,
-                            aliases: DataFrame, out_dir: str, lineage_dir: str,
-                            n_buckets: int = 16, promote: bool = True,
-                            broadcast_index: bool | None = None) -> DataFrame:
-    """link_mentions with a bucket-resumable KB phase (north_rule resume).
-
-    The expensive part of linking — candidate generation + scoring + ranking
-    — is per-mention independent, so it runs through plans.lineage.run_stage
-    on url-hash buckets: a killed job resumes by skipping completed buckets
-    and overwriting only recomputed partitions.  NIL detection is also
-    per-mention (no gated candidate), but the PROMOTION threshold counts
-    still-NIL mentions across the whole corpus (our deliberate,
-    deterministic generalization of the reference's per-document,
-    listdir-order-dependent counter — DEVIATIONS #14), so the
-    NIL tail is recomputed globally on every run — it is an anti-join plus
-    a groupBy over the small NIL remainder, cheap relative to the KB phase.
-    Output is row-identical to link_mentions on the same inputs.
-    """
-    from ..plans.lineage import run_stage
-    from ..session import materialize
-
-    alias_table = build_alias_table(clean_kb(kb), aliases).localCheckpoint()
-
-    def kb_phase(m_subset: DataFrame) -> DataFrame:
-        q = materialize(_nam_queries(m_subset), "queries")
-        cands = generate_candidates_unified(q, alias_table, MAX_FUZZY_DIST,
-                                            broadcast_index=broadcast_index)
-        scored = disambiguate(score_candidates(cands, q), q)
-        return scored.select(
-            "url", "mid",
-            F.concat(F.lit("refkb:"), F.col("eid")).alias("eid"),
-            "cname", "confidence", "rank",
-            F.lit(0).alias("subcomponent"),
-        )
-
-    kb_links = run_stage(spark, mentions, "kb_links", kb_phase,
-                         out_dir, lineage_dir, n_buckets).drop("bucket")
-
-    # materialize: the NIL tail fans this into the kb_links anti-join, the
-    # seed anti-join, promote_nils, and tmpkb_lookup — unmaterialized, each
-    # consumer re-derives the full mentions plan (a mapInPandas NER pass
-    # when the caller hands the discovery frame in directly)
-    queries = materialize(_nam_queries(mentions), "queries-nil")
-    nil_queries = queries.join(kb_links.select("mid").distinct(), "mid", "left_anti")
-    seed = tmpkb_seed(spark)
-    # token-AND retrieval decides who still counts toward promotion — same
-    # as link_mentions (the reference's tmpkb.query-then-count order)
-    seed_hit_mids = tmpkb_lookup(nil_queries, seed).select("mid").distinct()
-    unresolved = nil_queries.join(seed_hit_mids, "mid", "left_anti")
-    tmpkb = seed.unionByName(promote_nils(unresolved)) if promote else seed
-    tmp_links = tmpkb_lookup(nil_queries, tmpkb)
-    return kb_links.unionByName(tmp_links)

@@ -91,6 +91,9 @@ def cosine_topk(
             .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
             .collect()
         )
+        if not q_rows:  # no query id in the corpus: no neighbours to rank
+            return emb.sparkSession.createDataFrame(
+                [], "q_id long, n_id long, cos double, rnk int")
         q_ids = np.array([r.q_id for r in q_rows], dtype=np.int64)
         Q = np.stack([np.asarray(r.q_vec, dtype=np.float64) for r in q_rows])
         sc = emb.sparkSession.sparkContext

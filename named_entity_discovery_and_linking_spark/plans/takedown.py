@@ -212,6 +212,10 @@ def takedown_urls(spark: SparkSession, out_dir: str, urls: list[str] | DataFrame
         write_stage_metrics(
             lineage_dir, f"takedown-{int(t0)}", "takedown",
             wall_s=time.time() - t0, n_buckets=n_buckets,
-            n_rows=sum(removed.values()), extra=removed,
+            # rows of tables only: urls_unmatched counts urls, and the
+            # triples_nt lines are the triples rows again
+            n_rows=sum(v for k, v in removed.items()
+                       if k not in ("urls_unmatched", "triples_nt")),
+            extra=removed,
         )
     return removed

@@ -162,9 +162,16 @@ def test_connected_components_matches_union_find_on_random_graphs(spark):
         edges.extend(es)
         expected_parent.update(uf_build(nodes, es))
 
-    df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["mid"]: r["cluster_id"] for r in connected_components(df).collect()}
+    # columns in (dst, src) order plus one edge with a NULL endpoint: both
+    # the driver union-find and the distributed loop read the endpoints by
+    # name and drop that edge
+    df = spark.createDataFrame([(b, a) for a, b in edges] + [(None, "zz")],
+                               "dst string, src string")
     # connected_components labels only nodes that appear in edges
     touched = {a for e in edges for a in e}
     want = {n: p for n, p in expected_parent.items() if n in touched}
-    assert got == want
+    driver = connected_components(df)
+    loop = connected_components(df, driver_max_edges=None)
+    assert driver.schema == loop.schema
+    for comp in (driver, loop):
+        assert {r["mid"]: r["cluster_id"] for r in comp.collect()} == want

@@ -76,9 +76,12 @@ def test_lsh_bucketed_nn_arrow_equals_jvm(emb_df):
 
 
 def test_cosine_topk_arrow_equals_jvm(emb_df):
-    new = _rows(S.cosine_topk(emb_df, [0, 1, 2, 1000], k=4, use_arrow=True))
-    old = _rows(S.cosine_topk(emb_df, [0, 1, 2, 1000], k=4, use_arrow=False))
-    assert new == old and len(new) == 16
+    # the second id list has no id in the corpus: both paths give no rows
+    for query_ids, n_rows in (([0, 1, 2, 1000], 16), ([5000, 5001], 0)):
+        new = S.cosine_topk(emb_df, query_ids, k=4, use_arrow=True)
+        old = S.cosine_topk(emb_df, query_ids, k=4, use_arrow=False)
+        assert new.columns == old.columns == ["q_id", "n_id", "cos", "rnk"]
+        assert _rows(new) == _rows(old) and len(_rows(new)) == n_rows
 
 
 def test_ivf_assign_arrow_equals_jvm(emb_df):

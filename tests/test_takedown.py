@@ -154,6 +154,14 @@ def test_takedown_regenerates_ntriples_and_reports_unmatched(spark, tmp_path):
     assert spark.read.text(f"{out}/triples_nt").count() == tri_after
     # the never-crawled url removed nothing anywhere and is reported
     assert removed["urls_unmatched"] == 1
+    # the audit record counts table rows only: neither the url count nor
+    # the export lines (a copy of the triples rows) add to n_rows
+    from named_entity_discovery_and_linking_spark.plans.metrics import read_metrics
+
+    (rec,) = read_metrics(spark, f"{out}/_lineage").filter("stage = 'takedown'").collect()
+    tables = ("mentions", "kb_links", "links", "triples", "edges", "nodes")
+    assert rec["n_rows"] == sum(removed[t] for t in tables)
+    assert json.loads(rec["extra"]) == removed
 
 
 def test_rebuild_after_takedown_drops_under_threshold_promotion(spark, tmp_path):
