@@ -1,6 +1,6 @@
-"""NumPy fast path for the embedding-cosine family — bit-identical to the
-JVM Column formulation it replaces (guide §4.2: let Spark do distribution,
-hand whole Arrow batches to vectorized native code).
+"""NumPy kernels for the embedding-cosine family — bit-identical to the
+JVM Column formulation similarity.cosine (Spark does the distribution,
+whole Arrow batches go to vectorized native code).
 
 The JVM expression this mirrors (similarity.cosine) is
 
@@ -25,6 +25,16 @@ values within 1e-6 of a .5 ulp boundary (where binary and decimal rounding
 could disagree) through the exact Decimal path — a ~2e-6 fraction of
 uniformly distributed inputs.  BigDecimal never yields -0.0, so results are
 normalized with ``+ 0.0``.
+
+Zero norms: a cosine whose denominator ``norm_a * norm_b`` is 0 (a zero
+vector, or one whose squared norm underflows to 0) is an error —
+``cross_cos`` and ``rows_cos`` raise ``ValueError``, as the JVM expression
+raises DIVIDE_BY_ZERO under ANSI mode.  The kernels score each row against
+itself too, and that self-pair counts as a computed cosine: a zero vector
+fails wherever it is scored at all, even in a one-row ``cosine_topk``
+corpus where the JVM pair join (``x.vid != y.vid``) computes nothing.  An
+operator that never scores a zero vector (a singleton LSH bucket) does not
+fail.
 """
 
 from __future__ import annotations
@@ -76,6 +86,13 @@ def norms_l2(V: np.ndarray) -> np.ndarray:
     return np.sqrt(acc)
 
 
+def _divide(dots: np.ndarray, denom: np.ndarray, rounded: bool) -> np.ndarray:
+    if not denom.all():
+        raise ValueError("cosine with a zero-norm vector: norm_a * norm_b is 0")
+    cos = dots / denom
+    return round6(cos) if rounded else cos
+
+
 def cross_cos(V: np.ndarray, C: np.ndarray, v_norms=None, c_norms=None,
               rounded: bool = True) -> np.ndarray:
     """(n, d) x (k, d) -> (n, k) cosine matrix, JVM-identical doubles.
@@ -92,8 +109,7 @@ def cross_cos(V: np.ndarray, C: np.ndarray, v_norms=None, c_norms=None,
     acc = np.zeros((n, k), dtype=np.float64)
     for i in range(d):
         acc = acc + V[:, i, None] * C[None, :, i]
-    cos = acc / (v_norms[:, None] * c_norms[None, :])
-    return round6(cos) if rounded else cos
+    return _divide(acc, v_norms[:, None] * c_norms[None, :], rounded)
 
 
 def rows_cos(A: np.ndarray, B: np.ndarray, rounded: bool = True) -> np.ndarray:
@@ -101,5 +117,4 @@ def rows_cos(A: np.ndarray, B: np.ndarray, rounded: bool = True) -> np.ndarray:
     acc = np.zeros(A.shape[0], dtype=np.float64)
     for i in range(A.shape[1]):
         acc = acc + A[:, i] * B[:, i]
-    cos = acc / (norms_l2(A) * norms_l2(B))
-    return round6(cos) if rounded else cos
+    return _divide(acc, norms_l2(A) * norms_l2(B), rounded)

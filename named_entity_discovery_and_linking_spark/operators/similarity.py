@@ -1,10 +1,15 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (integral ids, array<double>
+vectors — checked at each kernel operator's entry).
 
 Brute-force cosine top-k as the correctness baseline, and a sign-bit LSH
 bucketed variant as the scale path (candidates only collide within a
-bucket).  Dot products are pure Column expressions (zip_with + aggregate)
-— JVM-side, no Python.  Cosines are rounded to 6 dp so a DuckDB oracle
-(list_cosine_similarity) matches despite summation-order ULP differences.
+bucket).  The ANN/dedup operators compute their cosines in the NumPy Arrow
+kernels of functions/fastcos, one mapInPandas/applyInPandas crossing per
+batch or bucket; the kernels produce the doubles of the JVM expression
+``cosine`` bit for bit, zero-norm error included.  ``cosine`` itself
+scores embedding_link_scores and ivf_topk's probe and score.  Cosines are
+rounded to 6 dp so a DuckDB oracle (list_cosine_similarity) matches
+despite summation-order ULP differences.
 
 At 100 TB the brute-force path is a broadcast of the (small) query set
 against a partitioned corpus — linear scan, embarrassingly parallel; the
@@ -62,59 +67,51 @@ def cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _check_embedding(emb: DataFrame, id_col: str, vec_col: str) -> None:
+    """The kernels read integral ids and array<double> vectors: an
+    array<float> column would not reproduce the JVM doubles bit for bit,
+    and a string id would only fail deep inside an Arrow batch."""
+    types = dict(emb.dtypes)
+    if types[id_col] not in ("tinyint", "smallint", "int", "bigint"):
+        raise TypeError(f"id column {id_col!r} must be integral, got {types[id_col]}")
+    if types[vec_col] != "array<double>":
+        raise TypeError(
+            f"vector column {vec_col!r} must be array<double>, got {types[vec_col]}")
+
+
 def cosine_topk(
     emb: DataFrame, query_ids: list, k: int = 3,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Brute-force cosine top-k: for each query id, the k nearest other
-    vectors.  Returns (q_id, n_id, cos) with deterministic tie-break on id.
-    The query side is tiny -> broadcast; the corpus is scanned once.
+    vectors.  Returns (q_id, n_id, cos, rnk) with deterministic tie-break on
+    id.  The query side is tiny -> broadcast; the corpus is scanned once by
+    a NumPy mapInPandas batch kernel (functions/fastcos)."""
+    import numpy as np
 
-    ``use_arrow=True`` (default) scores the scan with a NumPy mapInPandas
-    batch kernel instead of the JVM aggregate/zip_with expression: higher-
-    order functions are evaluated interpreted (no whole-stage codegen), and
-    the Arrow path computes bit-identical doubles (functions/fastcos.py) at
-    a fraction of the cost (guide §4.2).  ``False`` keeps the pure-Column
-    plan — the equivalence test pins the two paths equal."""
+    _check_embedding(emb, id_col, vec_col)
     c = emb.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"))
-    if use_arrow:
-        import numpy as np
+    # the query set is the operator's bounded input (a handful of ids);
+    # pulling it to the driver is the same control-plane transfer a
+    # broadcast join would make, minus one corpus-side scan
+    q_rows = sorted(
+        emb.filter(F.col(id_col).isin(query_ids))
+        .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+        .collect()
+    )
+    if not q_rows:  # no query id in the corpus: no neighbours to rank
+        return emb.sparkSession.createDataFrame(
+            [], "q_id long, n_id long, cos double, rnk int")
+    q_ids = np.array([r.q_id for r in q_rows], dtype=np.int64)
+    Q = np.stack([np.asarray(r.q_vec, dtype=np.float64) for r in q_rows])
+    b = emb.sparkSession.sparkContext.broadcast((q_ids, Q))
 
-        from ..functions import fastcos as FC
-
-        # the query set is the operator's bounded input (a handful of ids);
-        # pulling it to the driver is the same control-plane transfer the
-        # broadcast-join plan performed, minus one corpus-side scan
-        q_rows = sorted(
-            emb.filter(F.col(id_col).isin(query_ids))
-            .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-            .collect()
+    def score(it):
+        yield from _np_iter_cos_vs_queries(
+            it, b.value[0], b.value[1], "n_id", skip_self=True
         )
-        if not q_rows:  # no query id in the corpus: no neighbours to rank
-            return emb.sparkSession.createDataFrame(
-                [], "q_id long, n_id long, cos double, rnk int")
-        q_ids = np.array([r.q_id for r in q_rows], dtype=np.int64)
-        Q = np.stack([np.asarray(r.q_vec, dtype=np.float64) for r in q_rows])
-        sc = emb.sparkSession.sparkContext
-        b = sc.broadcast((q_ids, Q))
 
-        def score(it):
-            yield from _np_iter_cos_vs_queries(
-                it, b.value[0], b.value[1], "n_id", skip_self=True
-            )
-
-        scored = c.mapInPandas(score, "q_id long, n_id long, cos double")
-    else:
-        q = emb.filter(F.col(id_col).isin(query_ids)).select(
-            F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-        )
-        scored = (
-            F.broadcast(q)
-            .crossJoin(c)
-            .filter(F.col("q_id") != F.col("n_id"))
-            .select("q_id", "n_id", F.round(cosine(F.col("q_vec"), F.col("n_vec")), 6).alias("cos"))
-        )
+    scored = c.mapInPandas(score, "q_id long, n_id long, cos double")
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
     return (
         scored.withColumn("rnk", F.row_number().over(w))
@@ -140,13 +137,14 @@ def embedding_link_scores(
     (score desc, eid asc) ranking.  Returns (mid, eid, cos, prior_feat,
     score, rnk).
 
-    All arithmetic is pure Column expressions (zip_with/aggregate dot
-    product — JVM codegen, no Python); cosine and the prior feature are
+    All arithmetic is Column expressions (the zip_with/aggregate
+    ``cosine`` — JVM-side, no Python); cosine and the prior feature are
     rounded to 6 dp BEFORE blending so a SQL oracle reproduces the exact
     doubles.  One window over the candidate set keyed by mention — at
     scale the candidate frame is already partitioned by mention id from
     candidate generation, so the window sorts within partitions without an
-    extra exchange.
+    extra exchange.  (A mapInPandas cosine here drops that partitioning
+    and adds a second hash exchange — measured on Spark 4.1.)
     """
     per_m = Window.partitionBy(mention_col)
     cos = F.round(cosine(F.col(ctx_col), F.col(ent_col)), 6)
@@ -205,7 +203,8 @@ def adaptive_nbits(n: int, target_bucket: int = 64, min_bits: int = 4,
 def _bucket_nn_pandas(pdf):
     """Per-bucket NN kernel: (vid, vec) rows sharing one LSH bucket ->
     (vec_id, nn_id, cos) best match per vector, cosine doubles and argmax
-    tie-break (cos desc, nn_id asc) identical to the JVM pair-join plan."""
+    tie-break (cos desc, nn_id asc) of a within-bucket pair join over
+    ``cosine``."""
     import numpy as np
     import pandas as pd
 
@@ -239,57 +238,34 @@ def _bucket_nn_pandas(pdf):
 
 def lsh_bucketed_nn(
     emb: DataFrame, nbits: int | None = 8, id_col: str = "vec_id", vec_col: str = "embedding",
-    target_bucket: int = 64, use_arrow: bool = True,
+    target_bucket: int = 64,
 ) -> DataFrame:
     """Approximate nearest neighbor within sign-LSH buckets: for every
     vector, the best cosine match sharing its bucket.  Returns
     (vec_id, nn_id, cos).  The work is keyed on bucket — shuffle on a
-    low-cardinality key; AQE splits hot buckets.
+    low-cardinality key; AQE splits hot buckets.  The within-bucket argmax
+    is one vectorized matrix pass per bucket (groupBy(bucket).applyInPandas,
+    _bucket_nn_pandas) that emits only the n argmax rows.
 
     ``nbits=None`` sizes the bucket width from the corpus count
     (adaptive_nbits) — one count job up front; on a metastore-backed table
-    at 100 TB, use the table statistics row count instead of a scan.
-
-    ``use_arrow=True`` (default) computes the within-bucket argmax with a
-    per-bucket NumPy kernel (groupBy(bucket).applyInPandas): the JVM plan
-    evaluated one interpreted aggregate/zip_with cosine per PAIR and then
-    sort-aggregated the O(sum |bucket|^2) pair frame (max(struct) has no
-    hash-agg path); the kernel computes the same doubles (fastcos) inside
-    one vectorized matrix pass per bucket and emits only the n argmax rows.
-    ``False`` keeps the original pair-join plan for A/B equivalence."""
+    at 100 TB, use the table statistics row count instead of a scan."""
+    _check_embedding(emb, id_col, vec_col)
     if nbits is None:
         nbits = adaptive_nbits(emb.count(), target_bucket)
     b = emb.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
         sign_bucket(vec_col, nbits).alias("bucket"),
     )
-    if use_arrow:
-        return b.groupBy("bucket").applyInPandas(
-            _bucket_nn_pandas, "vec_id long, nn_id long, cos double"
-        )
-    x = b.alias("x")
-    y = b.alias("y")
-    pairs = x.join(
-        y, (F.col("x.bucket") == F.col("y.bucket")) & (F.col("x.vid") != F.col("y.vid"))
-    ).select(
-        F.col("x.vid").alias("vec_id"), F.col("y.vid").alias("nn_id"),
-        F.round(cosine(F.col("x.vec"), F.col("y.vec")), 6).alias("cos"),
+    return b.groupBy("bucket").applyInPandas(
+        _bucket_nn_pandas, "vec_id long, nn_id long, cos double"
     )
-    # argmax (cos desc, nn_id asc) via groupBy max(struct): the within-bucket
-    # pair frame is the BIG one here — partial aggregation collapses it
-    # map-side instead of shuffling every pair through a window sort
-    best = pairs.groupBy("vec_id").agg(
-        F.max(F.struct(
-            F.col("cos"), (-F.col("nn_id")).alias("neg_nn"), F.col("nn_id"),
-        )).alias("b")
-    )
-    return best.select("vec_id", F.col("b.nn_id").alias("nn_id"), F.col("b.cos").alias("cos"))
 
 
 def _pairs_cos_filter(pairs_with_vecs: DataFrame, threshold: float) -> DataFrame:
     """(id_a, id_b, vec_a, vec_b) candidate pairs -> (id_a, id_b, cos) with
     cos >= threshold; cosine computed by the NumPy Arrow kernel (fastcos —
-    doubles bit-identical to the JVM expression it replaces)."""
+    doubles bit-identical to the JVM expression ``cosine``)."""
 
     def run(it):
         import pandas as pd
@@ -314,7 +290,7 @@ def _pairs_cos_filter(pairs_with_vecs: DataFrame, threshold: float) -> DataFrame
 def embedding_near_dup_pairs(
     emb: DataFrame, threshold: float = 0.9, nbits: int | None = None,
     id_col: str = "vec_id", vec_col: str = "embedding", target_bucket: int = 64,
-    n_tables: int = 1, use_arrow: bool = True,
+    n_tables: int = 1,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS (the training-data-dedup
     brief's fifth dedup mode, alongside exact/Jaccard/MinHash/SimHash):
@@ -332,7 +308,9 @@ def embedding_near_dup_pairs(
     candidates are distinct-deduped BEFORE the cosine verify so each pair
     is verified once.  Cost: n_tables bucket equi-joins + two id-keyed
     hash joins to re-attach vectors for the verify; the single-table path
-    keeps the cheaper inline-verify plan (no re-attach joins)."""
+    keeps the cheaper inline-verify plan (no re-attach joins).  The verify
+    is the NumPy Arrow kernel (_pairs_cos_filter)."""
+    _check_embedding(emb, id_col, vec_col)
     if nbits is None:
         nbits = adaptive_nbits(emb.count(), target_bucket)
     base = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
@@ -345,12 +323,7 @@ def embedding_near_dup_pairs(
             F.col("x.vid").alias("id_a"), F.col("y.vid").alias("id_b"),
             F.col("x.vec").alias("vec_a"), F.col("y.vec").alias("vec_b"),
         )
-        if use_arrow:  # r07: Arrow kernel verify (guide §4.2)
-            return _pairs_cos_filter(pairs, threshold)
-        return pairs.select(
-            "id_a", "id_b",
-            F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6).alias("cos"),
-        ).filter(F.col("cos") >= threshold)
+        return _pairs_cos_filter(pairs, threshold)
     cand = None
     for t in range(n_tables):
         bt = base.withColumn("bucket", sign_bucket("vec", nbits, offset=t * nbits))
@@ -365,12 +338,7 @@ def embedding_near_dup_pairs(
     withv = cand.join(a, "id_a").join(bv, "id_b").select(
         "id_a", "id_b", "vec_a", "vec_b"
     )
-    if use_arrow:  # r07: Arrow kernel verify (guide §4.2)
-        return _pairs_cos_filter(withv, threshold)
-    return withv.select(
-        "id_a", "id_b",
-        F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6).alias("cos"),
-    ).filter(F.col("cos") >= threshold)
+    return _pairs_cos_filter(withv, threshold)
 
 
 # ------------------------------------------------------------------ IVF
@@ -405,8 +373,8 @@ def _cell_means(assigned: DataFrame) -> DataFrame:
 
 def _collect_centroids(centroids: DataFrame):
     """Centroid DataFrame -> (cells int64[k], C float64[k, d]) sorted by
-    cell id ascending — the bounded dimension transfer the JVM plan made as
-    a broadcast; k <= 65536 by construction (adaptive_n_cells clamp)."""
+    cell id ascending — a bounded dimension transfer, like a broadcast
+    join's; k <= 65536 by construction (adaptive_n_cells clamp)."""
     import numpy as np
 
     rows = sorted(centroids.collect(), key=lambda r: r[0])
@@ -476,42 +444,19 @@ def ivf_centroids(emb: DataFrame, n_cells: int | None = 8, id_col: str = "vec_id
 
 
 def ivf_assign(emb: DataFrame, centroids: DataFrame, id_col: str = "vec_id",
-               vec_col: str = "embedding", use_arrow: bool = True) -> DataFrame:
+               vec_col: str = "embedding") -> DataFrame:
     """Inverted lists: each vector gets its argmax-cosine centroid (ties ->
     lowest cell id).  One corpus scan against the (bounded, <= 65536-row)
-    centroid table — linear.
-
-    ``use_arrow=True`` (default): the centroid table is collected once
-    (the same driver->executor dimension transfer the broadcast join made)
-    and the n x k score matrix is computed per Arrow batch by the NumPy
-    kernel (fastcos — bit-identical doubles), emitting exactly n assigned
-    rows with no k-fold row expansion at all.  ``False`` keeps the original
-    crossJoin(broadcast) + groupBy max(struct) plan, whose k-fold expansion
-    evaluated one interpreted aggregate/zip_with cosine per (vector,
-    centroid) pair — the measured 60-second wall at 20k x 141 (bench r6)."""
-    if use_arrow:
-        sc = emb.sparkSession.sparkContext
-        bvar = sc.broadcast(_collect_centroids(centroids))
-        src = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-        return src.mapInPandas(
-            _assign_pandas_factory(bvar), "vid long, vec array<double>, cell int"
-        )
-    scored = (
-        emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            "vid", "vec", "cell",
-            F.round(cosine(F.col("vec"), F.col("centroid")), 6).alias("sim"),
-        )
+    centroid table — linear.  The centroid table is collected once and
+    broadcast; the n x k score matrix is computed per Arrow batch by the
+    NumPy kernel (_assign_pandas_factory), emitting exactly n assigned rows
+    with no k-fold row expansion."""
+    _check_embedding(emb, id_col, vec_col)
+    bvar = emb.sparkSession.sparkContext.broadcast(_collect_centroids(centroids))
+    src = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+    return src.mapInPandas(
+        _assign_pandas_factory(bvar), "vid long, vec array<double>, cell int"
     )
-    # max over (sim asc-break, -cell) == (sim desc, cell asc) argmax
-    best = scored.groupBy("vid").agg(
-        F.max(F.struct(
-            F.col("sim"), (-F.col("cell")).alias("neg_cell"),
-            F.col("cell"), F.col("vec"),
-        )).alias("b")
-    )
-    return best.select("vid", F.col("b.vec").alias("vec"), F.col("b.cell").alias("cell"))
 
 
 def ivf_topk(emb: DataFrame, query_ids: list, k: int = 3, n_cells: int | None = 8,

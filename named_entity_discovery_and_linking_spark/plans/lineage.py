@@ -171,8 +171,15 @@ def run_stage(
 
     run_id = run_id or f"run-{int(time.time())}-{os.getpid()}"
     bucketed = bucketize(pages, "url", n_buckets)
+
+    def stage_frame(subset):
+        result = transform(subset)
+        return result if "bucket" in result.columns else bucketize(result, "url", n_buckets)
+
+    schema = None
     out_fs = get_filesystem(out_dir)
     out_path = out_fs.join(out_dir, stage)
+    path = out_fs.spark_path(out_path)
     claim, claim_fs = _acquire_claim(lineage_dir, stage, run_id, claim_ttl, claim_timeout)
     hb_thread, hb_stop = _claim_heartbeat(claim_fs, claim, run_id, claim_ttl)
     t0 = time.time()
@@ -182,11 +189,9 @@ def run_stage(
         done = set(completed_buckets(spark, lineage_dir, stage))
         pending = bucketed.filter(~F.col("bucket").isin(list(done)) if done else F.lit(True))
         if pending.limit(1).count() > 0:
-            result = transform(pending)
-            if "bucket" not in result.columns:
-                result = bucketize(result, "url", n_buckets)
-            write_table(result, out_fs.spark_path(out_path),
-                        partition_by=["bucket"], mode="overwrite")
+            result = stage_frame(pending)
+            schema = result.schema
+            write_table(result, path, partition_by=["bucket"], mode="overwrite")
             pending_ids = {r["bucket"] for r in pending.select("bucket").distinct().collect()}
             # count from the written files (explicit schema: no inference
             # job, and robust to an all-empty write); bucket is the
@@ -194,7 +199,7 @@ def run_stage(
             # buckets this run wrote
             counts = {
                 r["bucket"]: r["n"]
-                for r in spark.read.schema(result.schema).parquet(out_fs.spark_path(out_path))
+                for r in spark.read.schema(schema).parquet(path)
                 .filter(F.col("bucket").isin(sorted(pending_ids)))
                 .groupBy("bucket").agg(F.count("*").alias("n")).collect()
             }
@@ -217,5 +222,15 @@ def run_stage(
         hb_stop.set()
         hb_thread.join(timeout=5.0)
         _release_claim(claim_fs, claim, run_id)
-    return (spark.read.parquet(out_fs.spark_path(out_path))
-            if out_fs.exists(out_path) else bucketed.limit(0))
+    written = out_fs.exists(out_path)
+    if schema is None and written and any(
+        n.startswith("bucket=") for n in out_fs.listdir(out_path)
+    ):
+        # nothing pending: the schema the completing run wrote (planning the
+        # transform would run it again on a driver with nothing to do)
+        return spark.read.parquet(path)
+    # the stage's own schema even when no bucket has a row to infer it from
+    schema = schema or stage_frame(bucketed.limit(0)).schema
+    if written:
+        return spark.read.schema(schema).parquet(path)
+    return spark.createDataFrame([], schema)

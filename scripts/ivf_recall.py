@@ -4,7 +4,7 @@ Ground truth is brute-force cosine_topk; recall@k = |IVF top-k ∩ exact
 top-k| / (|queries|·k), measured at two corpus sizes with the adaptive
 sqrt(n) cell count.  Prints a markdown table for BENCH.md.
 
-Usage: python scripts/ivf_recall.py
+Usage: python scripts/ivf_recall.py  (local[SPARK_GRAFT_CPUS], default: all cores)
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from named_entity_discovery_and_linking_spark.operators.similarity import (
@@ -22,18 +21,15 @@ from named_entity_discovery_and_linking_spark.operators.similarity import (
     cosine_topk,
     ivf_topk,
 )
+from named_entity_discovery_and_linking_spark.session import get_spark
 
 K = 10
 QUERIES = list(range(20))
 
 
 def main():
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .appName("ivf-recall")
-        .getOrCreate()
-    )
+    spark = get_spark("ivf-recall",
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     base = (
         spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")

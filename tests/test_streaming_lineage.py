@@ -191,6 +191,24 @@ def test_stale_claim_is_broken_live_claim_waits(spark, tmp_path):
     os.remove(claim)
 
 
+def test_cli_builds_corpus_without_english_page(spark, tmp_path):
+    """No English page means no mention: the mentions stage writes buckets
+    with no part file, and the kb_links stage has no bucket pending at all.
+    The batch build still finishes, and so does a rerun on the same out dir
+    (every bucket done, no part file to read a schema from)."""
+    from named_entity_discovery_and_linking_spark.__main__ import main
+
+    src, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    pages_df(spark, n_pages=12).withColumn("lang", F.lit("rus")).write.parquet(src)
+    for _ in range(2):
+        assert main(["--pages", src, "--out", out, "--buckets", "4"]) == 0
+        mentions = spark.read.schema("url string, mid string, bucket int").parquet(
+            os.path.join(out, "mentions"))
+        assert mentions.count() == 0
+        for table in ("links", "triples"):
+            assert spark.read.parquet(os.path.join(out, table)).count() == 0
+
+
 def test_stateful_nil_promotion_across_microbatches(spark, tmp_path):
     """The running NIL count lives in the state store: counts accumulate
     ACROSS micro-batches (maxFilesPerTrigger=1 -> one file per batch), the
