@@ -11,9 +11,10 @@ Deployment (north_star contract):
       --pages /path/to/pages_parquet --out /path/to/output \
       [--kb entities.tab --aliases alternate_names.tab] [--buckets 256]
 
-Stages: mentions (bucket-resumable via the lineage table) -> links ->
-clusters/entities -> triples + nodes/edges tables.  Re-running after a kill
-skips completed mention buckets and overwrites only recomputed partitions.
+Stages (``plans.graph.kg_build``, resumable): mentions and kb_links
+(bucket-resumable via the lineage table) -> links -> clusters/entities ->
+triples + nodes/edges tables.  Re-running after a kill skips completed
+buckets and overwrites only recomputed partitions.
 """
 
 from __future__ import annotations
@@ -120,9 +121,7 @@ def main(argv=None):
 
     from pyspark.sql import SparkSession
 
-    from .operators.mentions import discover_mentions
-    from .plans.graph import build_graph
-    from .plans.lineage import run_stage
+    from .plans.graph import kg_build
     from .session import _ship_package, get_spark
     from .sources.io import write_table
 
@@ -260,33 +259,17 @@ def main(argv=None):
         print(json.dumps(skew_report(pages, args.skew_report), sort_keys=True))
         return 0
 
-    lineage_dir = os.path.join(args.out, "_lineage")
-    mentions = run_stage(
-        spark, pages, "mentions", discover_mentions, args.out, lineage_dir, args.buckets
-    ).localCheckpoint()
-
-    kb, aliases = _load_kb(spark, args)
-
+    kg = kg_build(pages, *_load_kb(spark, args), resume=(args.out, args.buckets))
     if args.mentions_json:
         from .sources.json_compat import write_mention_json_dir
 
-        write_mention_json_dir(mentions, os.path.join(args.out, "mentions_json"))
-
-    from .operators.linking import link_mentions_resumable
-
-    links = link_mentions_resumable(
-        spark, mentions, kb, aliases, args.out, lineage_dir, args.buckets
-    ).localCheckpoint()
-    write_table(links, os.path.join(args.out, "links"))
-
-    triples, nodes, edges = build_graph(mentions, links)
-    write_table(triples, os.path.join(args.out, "triples"))
-    write_table(nodes, os.path.join(args.out, "nodes"))
-    write_table(edges, os.path.join(args.out, "edges"))
+        write_mention_json_dir(kg.mentions, os.path.join(args.out, "mentions_json"))
+    for table in ("links", "triples", "nodes", "edges"):
+        write_table(getattr(kg, table), os.path.join(args.out, table))
     if args.ntriples:
         from .sources.io import write_ntriples
 
-        write_ntriples(triples, os.path.join(args.out, "triples_nt"))
+        write_ntriples(kg.triples, os.path.join(args.out, "triples_nt"))
 
     if args.graph_stats:
         import json

@@ -42,37 +42,3 @@ def seeded_hash(col: Column | str, seed: int) -> Column:
 def seeded_hash_sql(expr: str, seed: int) -> str:
     return portable_hash_sql(f"'{seed}:' || {expr}")
 
-
-def minhash_signature(tokens_col: Column | str, num_hashes: int) -> Column:
-    """MinHash signature: array of min_{t in tokens} h_i(t) for i in 0..n-1.
-
-    Input is an ``array<string>`` column of (distinct) tokens.  Pure Column
-    expression: transform + array_min per hash function.
-    """
-    c = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-
-    def hasher(seed: int):
-        # closure factory — a `lambda t, i=i` two-parameter lambda would make
-        # transform() pass the array index as `i`, shadowing the seed with a
-        # Column whose repr leaks into the literal (see dedup.minhash_signatures)
-        return lambda t: portable_hash(F.concat(F.lit(f"{seed}:"), t))
-
-    sig = [
-        F.array_min(F.transform(c, hasher(i))).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-    return F.array(*sig)
-
-
-def minhash_sql(tokens_expr: str, num_hashes: int) -> list[str]:
-    """DuckDB SQL list: one min-hash expression per hash function.
-
-    ``tokens_expr`` must be a LIST(VARCHAR) expression.
-    """
-    return [
-        (
-            f"list_min(list_transform({tokens_expr}, "
-            f"t -> CAST('0x' || substring(md5('{i}:' || t), 1, 15) AS BIGINT)))"
-        )
-        for i in range(num_hashes)
-    ]

@@ -27,6 +27,8 @@ the (small) still-NIL subset, mirroring the reference's retry-on-miss.
 
 from __future__ import annotations
 
+from collections import namedtuple
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -156,6 +158,26 @@ def build_alias_table(kb_clean: DataFrame, aliases: DataFrame) -> DataFrame:
     )
 
 
+AliasIndex = namedtuple("AliasIndex", "table broadcast")
+
+
+def alias_index(kb: DataFrame, aliases: DataFrame) -> AliasIndex:
+    """The alias table of the cleaned KB, checkpointed once, and its join
+    regime (``broadcast``, see ``generate_candidates_unified``).
+
+    The table fans out into several exchanges (token index, variant index,
+    attribute rejoin); without the checkpoint every one of them re-runs
+    clean_kb's dedup window (dimension-scale: localCheckpoint is fine).
+    The regime comes from the row count observed on the checkpoint job
+    itself, so deciding it costs no job."""
+    from ..plans.metrics import observe
+
+    table, obs = observe(build_alias_table(clean_kb(kb), aliases), "alias_table",
+                         F.count(F.lit(1)).alias("n"))
+    # the checkpoint job runs first; it fills the observation
+    return AliasIndex(table.localCheckpoint(), obs.get["n"] <= FUZZY_BROADCAST_MAX_ALIASES)
+
+
 # ------------------------------------------------------------------ candidate generation
 
 def _del1_sql(e: str, var: str = "i") -> str:
@@ -258,7 +280,7 @@ def generate_candidates(queries: DataFrame, alias_table: DataFrame, fuzzy_dist: 
 
 def generate_candidates_unified(queries: DataFrame, alias_table: DataFrame,
                                 max_dist: int = MAX_FUZZY_DIST,
-                                broadcast_index: bool | None = None) -> DataFrame:
+                                broadcast_index: bool = True) -> DataFrame:
     """Exact + fuzzy candidate generation in ONE pass.
 
     The reference retries retrieval at dist = 1..min(5, len//5) only until
@@ -288,13 +310,8 @@ def generate_candidates_unified(queries: DataFrame, alias_table: DataFrame,
               variants and AQE free to convert back to broadcast/SHJ where
               runtime stats allow.  Measured sub-quadratic in corpus and KB
               size — see BENCH.md "fuzzy join, shuffled regime".
-      None  — auto: broadcast iff count(alias_table) <=
-              FUZZY_BROADCAST_MAX_ALIASES (one cheap count job on what the
-              caller keeps checkpointed; at real scale pass the flag or rely
-              on table statistics instead).
+    ``alias_index`` picks it from the table's size.
     """
-    if broadcast_index is None:
-        broadcast_index = alias_table.count() <= FUZZY_BROADCAST_MAX_ALIASES
 
     def _idx(df: DataFrame) -> DataFrame:
         """Alias-side index frame: broadcast when dimension-scale, else a
@@ -623,22 +640,20 @@ def tmpkb_lookup(nil_queries: DataFrame, tmpkb: DataFrame) -> DataFrame:
 
 # ------------------------------------------------------------------ full E2 plan
 
-def _rank(queries: DataFrame, alias_table: DataFrame,
-          broadcast_index: bool | None = None) -> DataFrame:
+def _rank(queries: DataFrame, index: AliasIndex) -> DataFrame:
     """Exact retrieval with the fuzzy retry, the F6 gate and rule scores,
     then disambiguation: every gated KB candidate of every query, ranked by
     normalized confidence."""
-    cands = generate_candidates_unified(queries, alias_table, MAX_FUZZY_DIST,
-                                        broadcast_index=broadcast_index)
+    cands = generate_candidates_unified(queries, index.table, MAX_FUZZY_DIST,
+                                        broadcast_index=index.broadcast)
     return disambiguate(score_candidates(cands, queries), queries)
 
 
-def _kb_phase(queries: DataFrame, alias_table: DataFrame,
-              broadcast_index: bool | None = None) -> DataFrame:
+def _kb_phase(queries: DataFrame, index: AliasIndex) -> DataFrame:
     """KB phase of E2: the ranked candidates as ``refkb:`` links
     (subcomponent 0).  Each query is linked independently of the others, so
     the phase may run on any subset of ``queries``."""
-    return _rank(queries, alias_table, broadcast_index).select(
+    return _rank(queries, index).select(
         "url", "mid",
         F.concat(F.lit("refkb:"), F.col("eid")).alias("eid"),
         "cname", "confidence", "rank",
@@ -674,9 +689,7 @@ def _nil_tail(queries: DataFrame, kb_links: DataFrame, promote: bool = True) -> 
 
 
 def link_mentions(mentions: DataFrame, kb: DataFrame, aliases: DataFrame,
-                  promote: bool = True,
-                  broadcast_index: bool | None = None,
-                  prebuilt_alias_table: DataFrame | None = None) -> DataFrame:
+                  promote: bool = True, *, index: AliasIndex | None = None) -> DataFrame:
     """Full E2: NAM mentions -> links (url, mid, eid, cname, confidence,
     rank, subcomponent).  subcomponent follows the reference encoding:
     0 = EntityLinker.query result, exact AND fuzzy (linking.py:564-568);
@@ -687,22 +700,13 @@ def link_mentions(mentions: DataFrame, kb: DataFrame, aliases: DataFrame,
     retries run only for mentions the exact pass left empty, with per-dist
     budget min(2, len(name)//5) (effective Lucene budget — see
     MAX_FUZZY_DIST); the temporary-KB pass (``_nil_tail``) runs only on
-    what is still NIL after that.
+    what is still NIL after that.  ``index`` is ``alias_index(kb, aliases)``
+    when the caller built it already (``plans.graph.kg_build`` overlaps
+    that build with mention discovery).
     """
     from ..session import materialize
 
-    # alias_table fans out into several broadcast exchanges (token index,
-    # variant index, attribute rejoin); without materialization every
-    # broadcast job re-runs clean_kb's dedup window — checkpoint once
-    # (dimension-scale: localCheckpoint is fine here).
-    # ``prebuilt_alias_table`` lets a caller that already materialized the
-    # table (e.g. kg_pipeline, which overlaps its build with the mention
-    # discovery job — guide §2.6) hand it in instead of paying the 5-job
-    # sequential build again here.
-    if prebuilt_alias_table is not None:
-        alias_table = prebuilt_alias_table
-    else:
-        alias_table = build_alias_table(clean_kb(kb), aliases).localCheckpoint()
+    index = index or alias_index(kb, aliases)
     # queries feeds candidate gen, scoring, the NIL anti-join and the tmp-KB
     # lookups.  r07: localCheckpoint instead of the parquet materialize —
     # the frame is one narrow row per NAM mention (~100x smaller than the
@@ -712,16 +716,17 @@ def link_mentions(mentions: DataFrame, kb: DataFrame, aliases: DataFrame,
     # mentions frame (tests, ad-hoc composition) also stay protected from
     # tagger re-derivation.
     queries = _nam_queries(mentions).localCheckpoint()
-    kb_links = materialize(_kb_phase(queries, alias_table, broadcast_index), "kb_links")
+    kb_links = materialize(_kb_phase(queries, index), "kb_links")
     return kb_links.unionByName(_nil_tail(queries, kb_links, promote))
 
 
-def link_mentions_resumable(spark, mentions: DataFrame, kb: DataFrame,
-                            aliases: DataFrame, out_dir: str, lineage_dir: str,
-                            n_buckets: int = 16) -> DataFrame:
+def link_mentions_resumable(spark, mentions: DataFrame, index: AliasIndex,
+                            out_dir: str, lineage_dir: str, n_buckets: int = 16,
+                            promote: bool = True) -> DataFrame:
     """``link_mentions`` whose KB phase runs through ``plans.lineage.run_stage``
     as the bucket-resumable stage ``kb_links``; that is the one difference,
-    and the output is row-identical to ``link_mentions`` on the same inputs.
+    and the output is row-identical to ``link_mentions`` on the same inputs
+    (``index`` = ``alias_index(kb, aliases)``).
 
     The KB phase links each query on its own, so it runs on url-hash
     buckets of the queries: a killed job resumes by skipping completed
@@ -732,12 +737,11 @@ def link_mentions_resumable(spark, mentions: DataFrame, kb: DataFrame,
     """
     from ..plans.lineage import run_stage
 
-    alias_table = build_alias_table(clean_kb(kb), aliases).localCheckpoint()
     queries = _nam_queries(mentions).localCheckpoint()
     kb_links = run_stage(spark, queries, "kb_links",
-                         lambda q: _kb_phase(q, alias_table),
+                         lambda q: _kb_phase(q, index),
                          out_dir, lineage_dir, n_buckets).drop("bucket")
-    return kb_links.unionByName(_nil_tail(queries, kb_links))
+    return kb_links.unionByName(_nil_tail(queries, kb_links, promote))
 
 
 def query_kb(spark, kb: DataFrame, aliases: DataFrame, queries: list,
@@ -761,13 +765,12 @@ def query_kb(spark, kb: DataFrame, aliases: DataFrame, queries: list,
         "url string, mid string, category string, mention string, "
         "type string, sent_text string",
     )
-    kbc = clean_kb(kb)
-    alias_table = build_alias_table(kbc, aliases).localCheckpoint()
-    ranked = _rank(_nam_queries(mentions), alias_table)
+    ranked = _rank(_nam_queries(mentions), alias_index(kb, aliases))
     return (
         ranked.join(mentions.select("mid", F.col("mention").alias("q_name"),
                                     F.col("type").alias("q_type")), "mid")
-        .join(F.broadcast(kbc.select("eid", "country", "feature", "wiki")), "eid", "left")
+        .join(F.broadcast(clean_kb(kb).select("eid", "country", "feature", "wiki")),
+              "eid", "left")
         .select("q_name", "q_type", "eid", "cname", "confidence", "rank",
                 "country", "feature", "wiki")
     )

@@ -1298,46 +1298,9 @@ def kg_pipeline(spark, sf_dir, replicate: int = 1):
     """Full KG pipeline (E1+E2+E3) over documents-derived pages; returns the
     triples DataFrame.  ``replicate`` scales the corpus for benchmarking."""
     from ..fixtures.generator import kb_dfs
-    from ..operators.linking import link_mentions
-    from ..operators.mentions import discover_mentions
-    from .graph import build_graph
+    from .graph import kg_build
 
-    from ..session import materialize
-
-    pages = derived_pages(spark, sf_dir, replicate)
-    kb, al = kb_dfs(spark)
-    # url-hash repartition at the materialization boundary: (a) the salted
-    # key the north_rule mandates, (b) AQE re-sizes the partition count to
-    # the DATA (mentions are ~100x smaller than pages; inheriting the
-    # tagger's partition count makes every downstream map stage pay its
-    # task-launch overhead — measured 0.45 s/stage at bench scale).
-    # materialize() = parquet spill, not localCheckpoint: these frames are
-    # data-scale and object caching was ~50% GC (see session.materialize)
-    #
-    # r07: the alias-table build (5 sequential dimension-scale broadcast
-    # jobs, ~2.4 s of pure job latency at bench scale) is independent of
-    # mention discovery, so the two run on overlapping driver threads and
-    # the alias wall hides under the tagger stage (guide §2.6).  Job
-    # descriptions are thread-local, so the UI stays labelled correctly.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.linking import build_alias_table, clean_kb
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_alias = pool.submit(
-            lambda: build_alias_table(clean_kb(kb), al).localCheckpoint()
-        )
-        m = materialize(discover_mentions(pages).repartition(F.col("url")), "mentions")
-        alias_table = fut_alias.result()
-    # broadcast_index=True: this KB is dimension-scale by contract (the
-    # cleaned reference KB is MBs) — skipping the auto-detect count job;
-    # web-scale KBs pass False explicitly (see generate_candidates_unified).
-    links = materialize(
-        link_mentions(m, kb, al, broadcast_index=True,
-                      prebuilt_alias_table=alias_table),
-        "links",
-    )
-    return build_graph(m, links)[0]
+    return kg_build(derived_pages(spark, sf_dir, replicate), *kb_dfs(spark)).triples
 
 
 def q_kg_triples(spark, sf_dir):

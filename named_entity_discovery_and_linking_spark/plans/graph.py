@@ -1,4 +1,4 @@
-"""E3: links + clusters -> triples / nodes / edges tables.
+"""E3: links + clusters -> triples / nodes / edges tables; ``kg_build`` (E1-E3).
 
 The reference serializes per-mention ``xref`` records into CSR JSON
 (linking.py:557-700); our comparison surface is an explicit triples table
@@ -8,6 +8,9 @@ aida:anchorOf.  nodes/edges are the Iceberg-shaped graph materialization
 """
 
 from __future__ import annotations
+
+import os
+from collections import namedtuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,16 +38,23 @@ def build_triples(mentions: DataFrame, links: DataFrame, clusters: DataFrame,
         F.col("eid").alias("obj"), F.col("confidence").alias("conf"),
         "url", "char_begin", "char_end",
     )
-    t_same = (
+    return (t_type.unionByName(t_anchor).unionByName(t_link)
+            .unionByName(same_as_triples(m, clusters, entities)))
+
+
+def same_as_triples(mentions: DataFrame, clusters: DataFrame, entities: DataFrame,
+                    *carry: str) -> DataFrame:
+    """``aida:sameAs`` rows: clustered mention -> its cluster's canonical
+    entity, plus the mention columns ``carry`` (reconcile's ``batch_id``)."""
+    return (
         clusters.join(entities, "cluster_id")
-        .join(m.select("mid", "url", "char_begin", "char_end"), "mid")
+        .join(mentions.select("mid", "url", "char_begin", "char_end", *carry), "mid")
         .select(
             F.col("mid").alias("subj"), F.lit("aida:sameAs").alias("pred"),
             F.col("eid").alias("obj"), F.lit(1.0).alias("conf"),
-            "url", "char_begin", "char_end",
+            "url", "char_begin", "char_end", *carry,
         )
     )
-    return t_type.unionByName(t_anchor).unionByName(t_link).unionByName(t_same)
 
 
 def graph_stats(nodes: DataFrame, edges: DataFrame, top_k: int = 10) -> dict:
@@ -108,3 +118,70 @@ def build_graph(mentions: DataFrame, links: DataFrame):
         )
     )
     return triples, nodes, edges
+
+
+KG = namedtuple("KG", "mentions links triples nodes edges")
+
+# the schemas of links/triples/nodes/edges, for a build whose pages yield
+# no mention (pinned against the full path by test_kg_build_without_mention)
+_EMPTY_KG = (
+    "url string, mid string, eid string, cname string, confidence double, rank int, "
+    "subcomponent int",
+    "subj string, pred string, obj string, conf double, url string, char_begin int, "
+    "char_end int",
+    "node_id string, canonical_name string",
+    "src string, rel string, dst string, confidence double, url string",
+)
+
+
+def kg_build(pages: DataFrame, kb: DataFrame, aliases: DataFrame, *,
+             promote: bool = True, resume: tuple[str, int] | None = None) -> KG:
+    """Mention discovery -> linking -> graph on ``pages``: the one KG build.
+
+    ``promote=False`` is the stream's flavour (see ``link_mentions``).
+    ``resume=(out_dir, n_buckets)``, the CLI's mode, runs the ``mentions``
+    and ``kb_links`` stages through ``run_stage`` (lineage in
+    ``<out_dir>/_lineage``), so a killed build skips the buckets it
+    completed; the output is the same.  Without ``resume``, pages that
+    yield no mention (a stream's non-English micro-batch) return empty
+    frames without linking: the row count observed on the mentions spill
+    says so at no extra job.
+
+    The alias index needs no page, so a second driver thread builds it
+    while discovery runs (r07: ~5 sequential jobs hidden under the tagger).
+    One materialization per frame, the r07 plan of ``kg_triples``: mentions
+    and links are data-scale and feed several consumers each, so each is
+    spilled to parquet once (in resume mode the ``run_stage`` table is the
+    mentions spill); the url repartition lets AQE size the mentions'
+    partitions to the mentions (~100x smaller than the pages).  A
+    long-lived caller frees the spills with ``session.spill_scope``.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    from ..operators.linking import alias_index, link_mentions, link_mentions_resumable
+    from ..operators.mentions import discover_mentions
+    from ..session import materialize
+    from .lineage import run_stage
+    from .metrics import observe
+
+    spark = pages.sparkSession
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        index = pool.submit(inheritable_thread_target(spark)(lambda: alias_index(kb, aliases)))
+        if resume is None:
+            mentions, seen = observe(discover_mentions(pages).repartition("url"), "mentions",
+                                     F.count(F.lit(1)).alias("n"))
+            mentions = materialize(mentions, "mentions")
+            if not seen.get["n"]:
+                return KG(mentions, *(spark.createDataFrame([], s) for s in _EMPTY_KG))
+            links = link_mentions(mentions, kb, aliases, promote, index=index.result())
+        else:
+            out_dir, n_buckets = resume
+            lineage_dir = os.path.join(out_dir, "_lineage")
+            mentions = run_stage(spark, pages, "mentions", discover_mentions,
+                                 out_dir, lineage_dir, n_buckets).drop("bucket")
+            links = link_mentions_resumable(spark, mentions, index.result(), out_dir,
+                                            lineage_dir, n_buckets, promote)
+    links = materialize(links, "links")
+    return KG(mentions, links, *build_graph(mentions, links))

@@ -73,14 +73,11 @@ def _swap_dirs(fs, live: str, tmp: str) -> None:
     fs.rmtree(old)
 
 
-def _rewrite_table(spark: SparkSession, fs, path: str, urls_df: DataFrame,
-                   n_buckets: int) -> int:
-    """Anti-join ``urls_df`` out of the table at ``path``; returns rows
-    removed.  Bucket-partitioned layout -> only affected bucket dirs are
-    rewritten; flat layout -> whole-dir swap."""
-    df = spark.read.parquet(fs.spark_path(path))
-    if "url" not in df.columns:
-        return 0
+def _rewrite_table(spark: SparkSession, fs, path: str, df: DataFrame,
+                   urls_df: DataFrame, n_buckets: int) -> int:
+    """Anti-join ``urls_df`` out of ``df``, the table at ``path``; returns
+    rows removed.  Bucket-partitioned layout -> only affected bucket dirs
+    are rewritten; flat layout -> whole-dir swap."""
     tmp = path.rstrip("/") + ".__takedown_tmp"
     fs.rmtree(tmp)
     if _is_bucket_partitioned(fs, path):
@@ -159,19 +156,26 @@ def takedown_urls(spark: SparkSession, out_dir: str, urls: list[str] | DataFrame
     try:
         for table in URL_TABLES:
             path = fs.join(out_dir, table)
-            if fs.exists(path):
-                df = spark.read.parquet(fs.spark_path(path))
-                if "url" in df.columns:
-                    # per-url match accounting (advisor r6 #4): a requested
-                    # url that normalize_url would collapse differently
-                    # matches nothing — surface that instead of silently
-                    # removing zero rows.  Bounded: one row per request url.
-                    for r in (
-                        df.join(broadcast(urls_df), "url", "left_semi")
-                        .groupBy("url").count().collect()
-                    ):
-                        per_url[r["url"]] += int(r["count"])
-                removed[table] = _rewrite_table(spark, fs, path, urls_df, n_buckets)
+            if not fs.exists(path):
+                continue
+            # Spark's rule: an entry starting with "_" or "." is no data.  A
+            # table with nothing else (a stage that wrote no row) has
+            # nothing to remove and no schema to read.
+            df = (spark.read.parquet(fs.spark_path(path)) if any(
+                not n.startswith(("_", ".")) for n in fs.listdir(path)) else None)
+            if df is None or "url" not in df.columns:
+                removed[table] = 0
+                continue
+            # per-url match accounting (advisor r6 #4): a requested url that
+            # normalize_url would collapse differently matches nothing —
+            # surface that instead of silently removing zero rows.
+            # Bounded: one row per request url.
+            for r in (
+                df.join(broadcast(urls_df), "url", "left_semi")
+                .groupBy("url").count().collect()
+            ):
+                per_url[r["url"]] += int(r["count"])
+            removed[table] = _rewrite_table(spark, fs, path, df, urls_df, n_buckets)
         nodes_path = fs.join(out_dir, "nodes")
         edges_path = fs.join(out_dir, "edges")
         if fs.exists(nodes_path) and fs.exists(edges_path):

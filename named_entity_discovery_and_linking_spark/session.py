@@ -8,7 +8,10 @@ skew-join handling, explicit shuffle partitions, Arrow-batched UDFs.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -91,18 +94,32 @@ def materialize(df, tag: str = "stage"):
         f"ndl-mat-{os.getpid()}-{tag}-{uuid.uuid4().hex[:8]}",
     )
     df.write.parquet(path)
-    _MATERIALIZED.append(path)
+    getattr(_SCOPE, "paths", _MATERIALIZED).append(path)
     # pass the known schema: skips the read-side schema-inference job
     # (driver-only footer sampling) that otherwise runs per materialization
     return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 _MATERIALIZED: list = []
+_SCOPE = threading.local()
+
+
+@contextlib.contextmanager
+def spill_scope():
+    """Delete, on leaving the block, the spills ``materialize`` wrote in it
+    on this thread; a long-lived caller (a stream's micro-batch) would
+    otherwise keep every batch's spills until the process exits.  Frames
+    read from them must not be used after the block."""
+    _SCOPE.paths = paths = []
+    try:
+        yield
+    finally:
+        del _SCOPE.paths
+        for p in paths:
+            shutil.rmtree(p, ignore_errors=True)
 
 
 def _cleanup_materialized() -> None:  # pragma: no cover - process teardown
-    import shutil
-
     for p in _MATERIALIZED:
         shutil.rmtree(p, ignore_errors=True)
 

@@ -3,7 +3,7 @@
 The reference has NO streaming — its corpus is a static directory processed
 in one pass (main.py:341-342).  A web-scale ingestion pipeline does:
 pages arrive continuously (file/Kafka source), mentions are extracted
-incrementally, and rolling windowed statistics feed monitoring.
+incrementally, and named observed metrics feed monitoring.
 
 Everything here reuses the exact batch tagger (operators/mentions.py) —
 ``mapInPandas`` is streaming-compatible for stateless stages, so the batch
@@ -34,27 +34,6 @@ def stream_mentions(pages_stream: DataFrame, cfg: TaggerConfig | None = None) ->
     """Streaming mention discovery: identical plan to the batch path —
     filter(lang) -> mapInPandas(tagger)."""
     return discover_mentions(pages_stream, cfg)
-
-
-def windowed_mention_counts(
-    mentions_stream: DataFrame, pages_stream: DataFrame, window: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Rolling typed-mention counts with late-data handling: join mentions
-    back to their page's warc_ts, watermark it, tumble-window per type.
-    Late pages beyond the watermark are dropped (state bounded)."""
-    ts = pages_stream.select("url", "warc_ts").withWatermark("warc_ts", watermark)
-    m = mentions_stream.select("url", "coarse_type")
-    return (
-        m.join(ts, "url")
-        .groupBy(F.window("warc_ts", window).alias("w"), "coarse_type")
-        .agg(F.count("*").alias("n_mentions"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "coarse_type", "n_mentions",
-        )
-    )
 
 
 def run_stream_to_table(
@@ -89,15 +68,14 @@ def run_stream_to_table(
 
 def stream_triples(
     spark: SparkSession, input_dir: str, output_dir: str, checkpoint_dir: str,
-    kb: DataFrame, aliases: DataFrame, cfg: TaggerConfig | None = None,
+    kb: DataFrame, aliases: DataFrame,
     timeout_sec: int = 120, state_dir: str | None = None,
     reconcile_every: int | None = None, incremental: bool = False,
 ):
     """Full KG construction as a stream: every micro-batch of pages runs the
-    SAME batch operators (discover_mentions -> link_mentions -> build_graph)
-    inside ``foreachBatch``, and the batch's triples land in a
-    ``batch_id=<n>`` partition written with dynamic partition overwrite
-    (sources/io.py:write_table).  A replayed micro-batch after a crash
+    SAME batch build (``plans.graph.kg_build``) inside ``foreachBatch``, and
+    the batch's triples land in a ``batch_id=<n>`` partition written with
+    dynamic partition overwrite (sources/io.py:write_table).  A replayed micro-batch after a crash
     carries the same batch_id and REWRITES its own partition instead of
     appending duplicates — exactly-once at the sink without a transactional
     format (and a no-op format switch when Iceberg is configured).
@@ -124,8 +102,8 @@ def stream_triples(
     output (pinned), but per-pass mention-level reads are pruned to new +
     assignment-changed batches instead of the whole history.
     """
-    from ..operators.linking import link_mentions
-    from ..plans.graph import build_graph
+    from ..plans.graph import kg_build
+    from ..session import spill_scope
     from ..sources.fs import get_filesystem
     from ..sources.io import write_table
 
@@ -145,39 +123,37 @@ def stream_triples(
         import time as _time
 
         t0 = _time.time()
-        m = discover_mentions(batch_df, cfg).localCheckpoint()
-        if not m.take(1):
-            return
-        links = link_mentions(m, kb, aliases, promote=False).localCheckpoint()
-        triples = build_graph(m, links)[0].withColumn("batch_id", F.lit(batch_id))
-        # observe() piggybacks the triple count on the sink write itself —
-        # the per-batch metrics record costs zero extra jobs.
-        from ..plans.metrics import observe, write_stage_metrics
+        with spill_scope():  # this batch's mentions/links spills
+            m, links, triples, _, _ = kg_build(batch_df, kb, aliases, promote=False)
+            if m.isEmpty():  # no mention: no partition, no record, no reconcile
+                return
+            # observe() piggybacks the triple count on the sink write itself —
+            # the per-batch metrics record costs zero extra jobs.
+            from ..plans.metrics import observe, write_stage_metrics
 
-        triples, obs = observe(
-            triples, f"batch_{batch_id}", F.count(F.lit(1)).alias("n_triples")
-        )
-        write_table(triples, output_dir, partition_by=["batch_id", "pred"])
-        if state_dir is not None:
-            # deterministic key: a checkpoint-replayed batch overwrites its
-            # own record (idempotent, like the sink partitions) instead of
-            # appending a duplicate
-            write_stage_metrics(
-                state_dir, run_id=f"batch-{batch_id}", stage="stream_triples",
-                wall_s=_time.time() - t0, n_buckets=1,
-                n_rows=int(obs.get["n_triples"]), key=f"batch_{batch_id}",
-            )
-            bid = F.lit(batch_id)
-            write_table(m.withColumn("batch_id", bid),
-                        state_fs.spark_path(state_fs.join(state_dir, "mentions")),
-                        partition_by=["batch_id"])
-            write_table(links.withColumn("batch_id", bid),
-                        state_fs.spark_path(state_fs.join(state_dir, "links")),
-                        partition_by=["batch_id"])
-            saw_batch.append(batch_id)
-            if reconcile_every and (batch_id + 1) % reconcile_every == 0:
-                _reconcile()
-                saw_batch.clear()
+            triples, obs = observe(triples.withColumn("batch_id", F.lit(batch_id)),
+                                   f"batch_{batch_id}", F.count(F.lit(1)).alias("n_triples"))
+            write_table(triples, output_dir, partition_by=["batch_id", "pred"])
+            if state_dir is not None:
+                # deterministic key: a checkpoint-replayed batch overwrites its
+                # own record (idempotent, like the sink partitions) instead of
+                # appending a duplicate
+                write_stage_metrics(
+                    state_dir, run_id=f"batch-{batch_id}", stage="stream_triples",
+                    wall_s=_time.time() - t0, n_buckets=1,
+                    n_rows=int(obs.get["n_triples"]), key=f"batch_{batch_id}",
+                )
+                bid = F.lit(batch_id)
+                write_table(m.withColumn("batch_id", bid),
+                            state_fs.spark_path(state_fs.join(state_dir, "mentions")),
+                            partition_by=["batch_id"])
+                write_table(links.withColumn("batch_id", bid),
+                            state_fs.spark_path(state_fs.join(state_dir, "links")),
+                            partition_by=["batch_id"])
+                saw_batch.append(batch_id)
+                if reconcile_every and (batch_id + 1) % reconcile_every == 0:
+                    _reconcile()
+                    saw_batch.clear()
 
     q = (
         pages.writeStream.foreachBatch(process)
@@ -216,6 +192,7 @@ def reconcile_triples(spark: SparkSession, triples_dir: str, state_dir: str) -> 
     set equals the batch path's (promote=False flavor) on the same pages —
     pinned by test_stream_reconcile_matches_batch."""
     from ..operators.canonicalize import canonical_entities, cluster_mentions
+    from ..plans.graph import same_as_triples
     from ..sources.fs import get_filesystem
     from ..sources.io import write_table
     from .reconcile import drop_stale_sameas_leaves
@@ -227,16 +204,7 @@ def reconcile_triples(spark: SparkSession, triples_dir: str, state_dir: str) -> 
         fs.spark_path(fs.join(state_dir, "links"))).localCheckpoint()
     clusters = cluster_mentions(mentions, links).localCheckpoint()
     entities = canonical_entities(clusters, links, mentions).localCheckpoint()
-    t_same = (
-        clusters.join(entities, "cluster_id")
-        .join(mentions.select("mid", "url", "char_begin", "char_end", "batch_id"), "mid")
-        .select(
-            F.col("mid").alias("subj"), F.lit("aida:sameAs").alias("pred"),
-            F.col("eid").alias("obj"), F.lit(1.0).alias("conf"),
-            "url", "char_begin", "char_end", "batch_id",
-        )
-        .localCheckpoint()
-    )
+    t_same = same_as_triples(mentions, clusters, entities, "batch_id").localCheckpoint()
     write_table(t_same, triples_dir, partition_by=["batch_id", "pred"])
     live = {r["batch_id"] for r in t_same.select("batch_id").distinct().collect()}
     drop_stale_sameas_leaves(triples_dir, live)

@@ -28,16 +28,11 @@ cat > driver.py <<'EOF'
 import sys
 from pyspark.sql import SparkSession
 from named_entity_discovery_and_linking_spark.fixtures.generator import pages_df, kb_dfs
-from named_entity_discovery_and_linking_spark.operators.mentions import discover_mentions
-from named_entity_discovery_and_linking_spark.operators.linking import link_mentions
-from named_entity_discovery_and_linking_spark.plans.graph import build_graph
+from named_entity_discovery_and_linking_spark.plans.graph import kg_build
 
 spark = SparkSession.builder.appName("ss-smoke").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
-pages = pages_df(spark, n_pages=25)
-kb, al = kb_dfs(spark)
-m = discover_mentions(pages).localCheckpoint()
-triples, _, _ = build_graph(m, link_mentions(m, kb, al).localCheckpoint())
+triples = kg_build(pages_df(spark, n_pages=25), *kb_dfs(spark)).triples
 triples.write.mode("overwrite").parquet(sys.argv[1])
 print("TRIPLES_WRITTEN", spark.read.parquet(sys.argv[1]).count())
 EOF

@@ -137,15 +137,10 @@ def test_write_ntriples_roundtrip_from_build_graph(spark):
         kb_dfs,
         pages_df,
     )
-    from named_entity_discovery_and_linking_spark.operators.linking import link_mentions
-    from named_entity_discovery_and_linking_spark.operators.mentions import discover_mentions
-    from named_entity_discovery_and_linking_spark.plans.graph import build_graph
+    from named_entity_discovery_and_linking_spark.plans.graph import kg_build
     from named_entity_discovery_and_linking_spark.sources.io import write_ntriples
 
-    pages = pages_df(spark, n_pages=12)
-    kb, al = kb_dfs(spark)
-    m = discover_mentions(pages).localCheckpoint()
-    triples, _, _ = build_graph(m, link_mentions(m, kb, al).localCheckpoint())
+    triples = kg_build(pages_df(spark, n_pages=12), *kb_dfs(spark)).triples
     n = triples.count()
     with tempfile.TemporaryDirectory() as td:
         out = f"{td}/nt"

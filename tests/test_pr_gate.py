@@ -15,12 +15,8 @@ import os
 import pytest
 
 from named_entity_discovery_and_linking_spark.fixtures.generator import kb_dfs, pages_df
-from named_entity_discovery_and_linking_spark.operators.linking import link_mentions
-from named_entity_discovery_and_linking_spark.operators.mentions import (
-    discover_mentions,
-    extract_text_df,
-)
-from named_entity_discovery_and_linking_spark.plans.graph import build_graph
+from named_entity_discovery_and_linking_spark.operators.mentions import extract_text_df
+from named_entity_discovery_and_linking_spark.plans.graph import kg_build
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "goldens")
 
@@ -28,10 +24,7 @@ GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "goldens")
 @pytest.fixture(scope="module")
 def produced(spark):
     pages = pages_df(spark, n_pages=40)
-    kb, al = kb_dfs(spark)
-    m = discover_mentions(pages).localCheckpoint()
-    links = link_mentions(m, kb, al).localCheckpoint()
-    triples = build_graph(m, links)[0]
+    triples = kg_build(pages, *kb_dfs(spark)).triples
     return pages, {
         (r["subj"], r["pred"], str(r["obj"]), round(r["conf"], 6)) for r in triples.collect()
     }

@@ -191,15 +191,17 @@ def test_stale_claim_is_broken_live_claim_waits(spark, tmp_path):
     os.remove(claim)
 
 
-def test_cli_builds_corpus_without_english_page(spark, tmp_path):
+def test_cli_builds_corpus_without_english_page(spark, tmp_path, capsys):
     """No English page means no mention: the mentions stage writes buckets
     with no part file, and the kb_links stage has no bucket pending at all.
     The batch build still finishes, and so does a rerun on the same out dir
-    (every bucket done, no part file to read a schema from)."""
+    (every bucket done, no part file to read a schema from).  A takedown on
+    that out dir removes nothing and reports its urls as unmatched."""
     from named_entity_discovery_and_linking_spark.__main__ import main
 
     src, out = str(tmp_path / "pages"), str(tmp_path / "out")
-    pages_df(spark, n_pages=12).withColumn("lang", F.lit("rus")).write.parquet(src)
+    pages = pages_df(spark, n_pages=12).withColumn("lang", F.lit("rus"))
+    pages.write.parquet(src)
     for _ in range(2):
         assert main(["--pages", src, "--out", out, "--buckets", "4"]) == 0
         mentions = spark.read.schema("url string, mid string, bucket int").parquet(
@@ -207,6 +209,15 @@ def test_cli_builds_corpus_without_english_page(spark, tmp_path):
         assert mentions.count() == 0
         for table in ("links", "triples"):
             assert spark.read.parquet(os.path.join(out, table)).count() == 0
+
+    urls = tmp_path / "urls.txt"
+    urls.write_text("\n".join(r["url"] for r in pages.limit(2).collect()) + "\n")
+    capsys.readouterr()
+    assert main(["--takedown", str(urls), "--out", out, "--buckets", "4"]) == 0
+    removed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert removed.pop("urls_unmatched") == 2
+    assert set(removed) >= {"mentions", "links", "triples", "edges"}
+    assert set(removed.values()) == {0}
 
 
 def test_stateful_nil_promotion_across_microbatches(spark, tmp_path):
@@ -263,9 +274,7 @@ def test_stream_triples_batch_parity_and_idempotent_restart(spark, tmp_path):
     (promote=False flavor) on the same pages; re-running against the same
     checkpoint must be a no-op (no duplicate batch partitions)."""
     from named_entity_discovery_and_linking_spark.fixtures.generator import kb_dfs
-    from named_entity_discovery_and_linking_spark.operators.linking import link_mentions
-    from named_entity_discovery_and_linking_spark.operators.mentions import discover_mentions
-    from named_entity_discovery_and_linking_spark.plans.graph import build_graph
+    from named_entity_discovery_and_linking_spark.plans.graph import kg_build
     from named_entity_discovery_and_linking_spark.streaming.stream_mentions import (
         stream_triples,
     )
@@ -282,9 +291,7 @@ def test_stream_triples_batch_parity_and_idempotent_restart(spark, tmp_path):
     got = spark.read.parquet(out_dir)
     assert {r["batch_id"] for r in got.select("batch_id").distinct().collect()} == {0}
 
-    m = discover_mentions(pages).localCheckpoint()
-    links = link_mentions(m, kb, al, promote=False).localCheckpoint()
-    want = build_graph(m, links)[0]
+    want = kg_build(pages, kb, al, promote=False).triples
     # select in the batch schema's order: (batch_id, pred) are partition
     # columns on disk, so the raw read appends them after the data columns
     a = sorted(map(tuple, got.select(*want.columns).collect()))
@@ -337,8 +344,7 @@ def test_stream_reconcile_matches_batch(spark, tmp_path):
     set then EQUALS the batch set.  Re-running reconcile is a no-op
     (idempotent partition rewrite)."""
     from named_entity_discovery_and_linking_spark.fixtures.generator import kb_dfs
-    from named_entity_discovery_and_linking_spark.operators.linking import link_mentions
-    from named_entity_discovery_and_linking_spark.plans.graph import build_graph
+    from named_entity_discovery_and_linking_spark.plans.graph import kg_build
     from named_entity_discovery_and_linking_spark.streaming.stream_mentions import (
         reconcile_triples,
         stream_triples,
@@ -360,9 +366,7 @@ def test_stream_reconcile_matches_batch(spark, tmp_path):
     stream_triples(spark, in_dir, out_dir, ckpt, kb, al, timeout_sec=180,
                    state_dir=state)
 
-    m = discover_mentions(all_pages).localCheckpoint()
-    links = link_mentions(m, kb, al, promote=False).localCheckpoint()
-    want_df = build_graph(m, links)[0]
+    want_df = kg_build(all_pages, kb, al, promote=False).triples
     want = sorted(map(tuple, want_df.collect()))
     cols = want_df.columns
 
@@ -384,8 +388,7 @@ def test_stream_final_reconcile_runs_automatically(spark, tmp_path):
     unreconciled: with a cadence the stream never hits (reconcile_every=99),
     the post-drain reconcile still makes streamed == batch."""
     from named_entity_discovery_and_linking_spark.fixtures.generator import kb_dfs
-    from named_entity_discovery_and_linking_spark.operators.linking import link_mentions
-    from named_entity_discovery_and_linking_spark.plans.graph import build_graph
+    from named_entity_discovery_and_linking_spark.plans.graph import kg_build
     from named_entity_discovery_and_linking_spark.streaming.stream_mentions import (
         stream_triples,
     )
@@ -406,9 +409,7 @@ def test_stream_final_reconcile_runs_automatically(spark, tmp_path):
     stream_triples(spark, in_dir, out_dir, ckpt, kb, al, timeout_sec=180,
                    state_dir=state, reconcile_every=99)
 
-    m = discover_mentions(all_pages).localCheckpoint()
-    links = link_mentions(m, kb, al, promote=False).localCheckpoint()
-    want_df = build_graph(m, links)[0]
+    want_df = kg_build(all_pages, kb, al, promote=False).triples
     want = sorted(map(tuple, want_df.collect()))
     got = sorted(map(tuple,
                      spark.read.parquet(out_dir).select(*want_df.columns).collect()))
@@ -461,6 +462,7 @@ def test_resumable_linking_matches_and_skips(spark, tmp_path):
     returns the same rows."""
     from named_entity_discovery_and_linking_spark.fixtures.generator import kb_dfs
     from named_entity_discovery_and_linking_spark.operators.linking import (
+        alias_index,
         link_mentions,
         link_mentions_resumable,
     )
@@ -475,7 +477,7 @@ def test_resumable_linking_matches_and_skips(spark, tmp_path):
 
     want = sorted(map(tuple, link_mentions(m, kb, al).collect()))
     got1 = sorted(map(tuple, link_mentions_resumable(
-        spark, m, kb, al, out, lin, n_buckets=4).collect()))
+        spark, m, alias_index(kb, al), out, lin, n_buckets=4).collect()))
     assert got1 == want
 
     done_after_first = set(completed_buckets(spark, lin, "kb_links"))
@@ -483,7 +485,7 @@ def test_resumable_linking_matches_and_skips(spark, tmp_path):
 
     # second run: every bucket already done -> pure read path, same rows
     got2 = sorted(map(tuple, link_mentions_resumable(
-        spark, m, kb, al, out, lin, n_buckets=4).collect()))
+        spark, m, alias_index(kb, al), out, lin, n_buckets=4).collect()))
     assert got2 == want
     assert set(completed_buckets(spark, lin, "kb_links")) == done_after_first
 
@@ -493,6 +495,7 @@ def test_resumable_linking_partial_resume(spark, tmp_path):
     just the missing ones and the union is still identical."""
     from named_entity_discovery_and_linking_spark.fixtures.generator import kb_dfs
     from named_entity_discovery_and_linking_spark.operators.linking import (
+        alias_index,
         link_mentions,
         link_mentions_resumable,
     )
@@ -508,7 +511,7 @@ def test_resumable_linking_partial_resume(spark, tmp_path):
     out = str(tmp_path / "out")
     lin = str(tmp_path / "lineage")
 
-    link_mentions_resumable(spark, m, kb, al, out, lin, n_buckets=4)
+    link_mentions_resumable(spark, m, alias_index(kb, al), out, lin, n_buckets=4)
     # "crash": drop lineage rows for half the buckets (output stays on disk —
     # the overwrite of those buckets must be idempotent)
     keep = read_lineage(spark, lin).filter("bucket < 2").collect()
@@ -526,15 +529,101 @@ def test_resumable_linking_partial_resume(spark, tmp_path):
 
     want = sorted(map(tuple, link_mentions(m, kb, al).collect()))
     got = sorted(map(tuple, link_mentions_resumable(
-        spark, m, kb, al, out, lin, n_buckets=4).collect()))
+        spark, m, alias_index(kb, al), out, lin, n_buckets=4).collect()))
     assert got == want
     assert len(set(completed_buckets(spark, lin, "kb_links"))) == 4
 
 
-def test_stream_cli_mode(spark, tmp_path):
-    """--stream CLI: pages parquet in, batch_id-partitioned triples out."""
+def test_kg_build_same_output_in_both_modes(spark, tmp_path):
+    """kg_build gives the same five frames in the bucket-resumable mode
+    (4 buckets), in the direct mode, on a repartitioned input, and on a
+    rerun of the resumable build over its own out dir (every bucket done)."""
+    from named_entity_discovery_and_linking_spark.fixtures.generator import kb_dfs
+    from named_entity_discovery_and_linking_spark.plans.graph import kg_build
+
+    pages = pages_df(spark, n_pages=40)
+    kb, al = kb_dfs(spark)
+    out = str(tmp_path / "out")
+
+    def frames(kg):
+        return {name: sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
+                for name, df in kg._asdict().items()}
+
+    want = frames(kg_build(pages, kb, al))
+    assert all(want.values())
+    assert frames(kg_build(pages.repartition(17), kb, al)) == want
+    for _ in range(2):
+        assert frames(kg_build(pages, kb, al, resume=(out, 4))) == want
+    assert len(completed_buckets(spark, os.path.join(out, "_lineage"), "kb_links")) == 4
+
+
+def test_kg_build_without_mention(spark, tmp_path):
+    """Pages without a mention: the direct build returns empty frames
+    without linking, with the columns and types the resumable build (which
+    runs every stage) gives."""
+    from named_entity_discovery_and_linking_spark.fixtures.generator import kb_dfs
+    from named_entity_discovery_and_linking_spark.plans.graph import kg_build
+
+    pages = pages_df(spark, n_pages=12).withColumn("lang", F.lit("rus"))
+    kb, al = kb_dfs(spark)
+    direct = kg_build(pages, kb, al)
+    full = kg_build(pages, kb, al, resume=(str(tmp_path / "out"), 4))
+    for name, df in direct._asdict().items():
+        want = getattr(full, name)
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in want.schema], name
+        assert df.count() == want.count() == 0, name
+
+
+def test_stream_skips_empty_micro_batch(spark, tmp_path):
+    """A micro-batch without a mention (all pages non-English) writes no
+    triples partition and no metrics record and triggers no reconcile, and
+    runs no linking: its jobs are discovery, the mentions spill and the
+    alias index the build starts alongside (8; linking and the graph would
+    add ~35).  The next batch's reconciled triples equal kg_build on its
+    pages."""
+    from named_entity_discovery_and_linking_spark.fixtures.generator import kb_dfs
+    from named_entity_discovery_and_linking_spark.plans.graph import kg_build
+    from named_entity_discovery_and_linking_spark.plans.metrics import read_metrics
+    from named_entity_discovery_and_linking_spark.streaming.stream_mentions import (
+        stream_triples,
+    )
+
+    pages = pages_df(spark, n_pages=12)
+    english = pages.filter("lang = 'eng'").coalesce(1)
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    ckpt, state = str(tmp_path / "ckpt"), str(tmp_path / "state")
+    kb, al = kb_dfs(spark)
+
+    def run():
+        return stream_triples(spark, in_dir, out_dir, ckpt, kb, al, timeout_sec=180,
+                              state_dir=state, reconcile_every=1, incremental=True)
+
+    pages.withColumn("lang", F.lit("rus")).coalesce(1).write.parquet(in_dir)
+    q = run()
+    # the micro-batch's jobs carry the query's job group
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))) <= 8
+    assert not os.path.exists(out_dir)
+    assert read_metrics(spark, state).count() == 0
+
+    english.write.mode("append").parquet(in_dir)
+    run()
+    got = spark.read.parquet(out_dir)
+    assert {r["batch_id"] for r in got.select("batch_id").distinct().collect()} == {1}
+    assert {(r["stage"], r["run_id"]) for r in read_metrics(spark, state).collect()} == {
+        ("stream_triples", "batch-1"), ("reconcile_incremental", "v1")}
+    want = kg_build(english, kb, al, promote=False).triples
+    assert sorted(map(tuple, got.select(*want.columns).collect())) == sorted(
+        map(tuple, want.collect()))
+
+
+def test_stream_cli_mode(spark, tmp_path, capsys):
+    """--stream CLI: pages parquet in, batch_id-partitioned triples out; a
+    --takedown on that out dir removes the urls' triples."""
     import subprocess
     import sys
+
+    from named_entity_discovery_and_linking_spark.__main__ import main
 
     pages = pages_df(spark, n_pages=8).coalesce(1)
     in_dir = str(tmp_path / "in")
@@ -553,6 +642,19 @@ def test_stream_cli_mode(spark, tmp_path):
     # --reconcile-every persisted the per-batch state and ran the global pass
     assert (out_dir / "_stream_state" / "mentions").exists()
     assert got.filter("pred = 'aida:sameAs'").count() > 0
+
+    taken = [r["url"] for r in got.select("url").distinct().orderBy("url").limit(2).collect()]
+    n_taken = got.filter(F.col("url").isin(taken)).count()
+    urls = tmp_path / "urls.txt"
+    urls.write_text("\n".join(taken) + "\n")
+    capsys.readouterr()
+    assert main(["--takedown", str(urls), "--out", str(out_dir)]) == 0
+    removed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert removed["triples"] == n_taken > 0
+    assert removed["urls_unmatched"] == 0
+    got = spark.read.parquet(str(out_dir / "triples"))
+    assert got.filter(F.col("url").isin(taken)).count() == 0
+    assert got.count() > 0
 
 
 def test_lineage_resume_prefixfs_scheme(spark, tmp_path):
@@ -703,8 +805,7 @@ def test_incremental_reconcile_matches_full_and_prunes(spark, tmp_path):
     to the full reconcile — and (b) stop re-reading history: a pass with no
     new batches and no assignment changes reads/rewrites nothing."""
     from named_entity_discovery_and_linking_spark.fixtures.generator import kb_dfs
-    from named_entity_discovery_and_linking_spark.operators.linking import link_mentions
-    from named_entity_discovery_and_linking_spark.plans.graph import build_graph
+    from named_entity_discovery_and_linking_spark.plans.graph import kg_build
     from named_entity_discovery_and_linking_spark.streaming.reconcile import (
         reconcile_triples_incremental,
     )
@@ -733,9 +834,7 @@ def test_incremental_reconcile_matches_full_and_prunes(spark, tmp_path):
     stats2 = reconcile_triples_incremental(spark, out_dir, state)
     assert stats2["new_batches"] == [1]
 
-    m = discover_mentions(all_pages).localCheckpoint()
-    links = link_mentions(m, kb, al, promote=False).localCheckpoint()
-    want_df = build_graph(m, links)[0]
+    want_df = kg_build(all_pages, kb, al, promote=False).triples
     want = sorted(map(tuple, want_df.collect()))
     cols = want_df.columns
     got = sorted(map(tuple, spark.read.parquet(out_dir).select(*cols).collect()))
