@@ -42,7 +42,7 @@ def _load_kb(spark, args):
     return load_entities_tab(spark, args.kb), aliases
 
 
-def main(argv=None):
+def _parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(prog="named_entity_discovery_and_linking_spark")
     ap.add_argument("--run-csr", dest="run_csr", action="store_true",
                     help="CSR linking mode (linking.py:480-700 --run_csr equivalent)")
@@ -97,9 +97,11 @@ def main(argv=None):
     ap.add_argument("--takedown", default=None, metavar="URLS_FILE",
                     help="one-shot: remove every row derived from the urls "
                          "listed in URLS_FILE (one per line) from the "
-                         "materialized tables under --out; bucket-partitioned "
-                         "tables are rewritten only in the affected url-hash "
-                         "buckets; orphaned nodes are GC'd")
+                         "materialized tables under --out (and the stream "
+                         "state of a --stream out dir); every table is "
+                         "rewritten only in the partition dirs that hold a "
+                         "listed url's row, keeping its layout; orphaned "
+                         "nodes are GC'd")
     ap.add_argument("--skew-report", dest="skew_report", default=None, metavar="KEY",
                     help="one-shot diagnostic: print hot-key stats and the "
                          "recommended salt factor for shuffling --pages on "
@@ -117,6 +119,11 @@ def main(argv=None):
     ap.add_argument("--aliases", default=None, help="alternate_names.tab path")
     ap.add_argument("--buckets", type=int, default=64, help="url-hash lineage buckets")
     ap.add_argument("--master", default=None)
+    return ap
+
+
+def main(argv=None):
+    ap = _parser()
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -161,7 +168,7 @@ def main(argv=None):
 
         with open(args.takedown) as fh:
             urls = [ln.strip() for ln in fh if ln.strip()]
-        removed = takedown_urls(spark, args.out, urls, n_buckets=args.buckets)
+        removed = takedown_urls(spark, args.out, urls)
         print(json.dumps(removed, sort_keys=True))
         return 0
     if args.run_csr:

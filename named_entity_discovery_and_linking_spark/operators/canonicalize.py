@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .linking import register_tmp_entities
+
 MAX_CC_ROUNDS = 12
 
 # Driver short-circuit bound for connected_components: edge sets at or
@@ -269,22 +271,7 @@ def canonical_entities(clusters: DataFrame, links: DataFrame, mentions: DataFram
     voted = cluster_link_vote(clusters, links).select("cluster_id", "eid", "cname").distinct()
     linked_clusters = voted.select("cluster_id").distinct()
     unlinked = clusters.select("cluster_id").distinct().join(linked_clusters, "cluster_id", "left_anti")
-    elected = elect_best_mention(clusters.join(unlinked, "cluster_id"), mentions).filter(
-        # registration type gate (linking.py:649-650): only these coarse
-        # types may become new temporary-KB entities
-        F.col("coarse_type").isin("GPE", "LOC", "FAC", "PER", "ORG", "VEH", "WEA")
-    ).select(
-        "cluster_id",
-        # sha1 over LOWER(best_mention): the reference registers
-        # tmpkb.register(best_mention.lower(), ...) (linking.py:653) while
-        # the xref's canonical_name keeps the raw case — matching both
-        # promote_nils' lowercased minting and plans/csr.py's ids
-        F.concat(
-            F.lit("tmpkb:@"),
-            F.substring(
-                F.sha1(F.concat_ws("|", F.lower("best_mention"), "coarse_type")), 1, 12
-            ),
-        ).alias("eid"),
-        F.col("best_mention").alias("cname"),
-    )
+    elected = register_tmp_entities(
+        elect_best_mention(clusters.join(unlinked, "cluster_id"), mentions), "best_mention"
+    ).select("cluster_id", "eid", F.col("best_mention").alias("cname"))
     return voted.unionByName(elected)

@@ -563,10 +563,25 @@ def tmpkb_seed(spark) -> DataFrame:
     ).withColumn("tmp_eid", _tmp_eid())
 
 
-def _tmp_eid():
+def _tmp_eid(name="name", typ="type"):
     """A6: deterministic id instead of the reference's mutable counter file
     (linking.py:340-361) — parallel-safe, resume-safe, idempotent."""
-    return F.concat(F.lit("@"), F.substring(F.sha1(F.concat_ws("|", "name", "type")), 1, 12))
+    return F.concat(F.lit("@"), F.substring(F.sha1(F.concat_ws("|", name, typ)), 1, 12))
+
+
+# A3's registration gate (linking.py:649-650): the only coarse types that
+# may become new temporary-KB entities
+TMPKB_REGISTER_TYPES = ("GPE", "LOC", "FAC", "PER", "ORG", "VEH", "WEA")
+
+
+def register_tmp_entities(elected: DataFrame, mention: str) -> DataFrame:
+    """A3 registration (linking.py:649-666): the rows of ``elected`` whose
+    ``coarse_type`` passes the gate, with their temporary-KB entity id as
+    ``eid``.  The id is ``_tmp_eid`` over LOWER(mention): the reference
+    registers ``tmpkb.register(best_mention.lower(), ...)`` (linking.py:653)
+    while the xref's canonical_name keeps the raw case."""
+    return elected.filter(F.col("coarse_type").isin(*TMPKB_REGISTER_TYPES)).withColumn(
+        "eid", F.concat(F.lit("tmpkb:"), _tmp_eid(F.lower(mention), "coarse_type")))
 
 
 def promote_nils(nil_queries: DataFrame) -> DataFrame:

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.canonicalize import cluster_link_vote, elect_best_mention
 from ..operators.enrich import merge_fringe_links
-from ..operators.linking import link_mentions
+from ..operators.linking import link_mentions, register_tmp_entities
 
 LANGS = ("en", "ru", "uk", "img")
 COMPONENT = "opera.entities.edl.refkb.xianyang"
@@ -171,16 +171,10 @@ def link_csr(entities: DataFrame, sentences: DataFrame, clusters: DataFrame,
     fully_nil = clu.select("cluster_id").distinct().join(
         linked_clusters, "cluster_id", "left_anti"
     )
-    elected = elect_best_mention(
+    elected = register_tmp_entities(elect_best_mention(
         clu.join(fully_nil, "cluster_id", "left_semi"), mention_surface
-    ).filter(
-        F.col("coarse_type").isin("GPE", "LOC", "FAC", "PER", "ORG", "VEH", "WEA")
-    ).select(
-        "cluster_id",
-        F.concat(
-            F.lit("tmpkb:@"),
-            F.substring(F.sha1(F.concat_ws("|", F.lower("best_mention"), "coarse_type")), 1, 12),
-        ).alias("e_eid"),
+    ), "best_mention").select(
+        "cluster_id", F.col("eid").alias("e_eid"),
         # raw case: the reference writes 'canonical_name': best_mention
         # as-is (linking.py:665) — only the REGISTERED tmp-KB name (and
         # hence the id) is lowercased

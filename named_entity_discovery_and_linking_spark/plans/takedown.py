@@ -8,22 +8,25 @@ this is ``DELETE FROM t WHERE url IN (...)``, a snapshot-atomic
 metadata+delete-file commit.  This module is the parquet emulation with
 the same scale posture:
 
-* **Bucket-partitioned tables** (``mentions``, ``kb_links`` — the lineage
-  stage outputs): the takedown set maps to its url-hash buckets, the scan
-  is partition-pruned to exactly those buckets, and only those bucket
-  directories are rewritten (tmp + rename swap).  Work is O(affected
-  buckets), not O(table) — at 10^12 documents a thousand-url takedown
-  touches at most a thousand of the table's buckets.
-* **Unpartitioned tables** (``links``, ``triples``, ``edges``): full
-  anti-join rewrite through a tmp dir + swap — the documented emulation
-  of Iceberg's delete-by-filter (at 100 TB you run Iceberg and never
-  rewrite the table).
+* **One rewrite for every layout** (flat, ``bucket=`` or
+  ``batch_id=``/``pred=``): the per-url accounting scan groups each
+  table's matched rows by the partition dir of the file they sit in
+  (``_metadata.file_path``), and only those dirs are rewritten, in one
+  write per table (tmp + rename swap).  Work is O(affected dirs), not
+  O(table): a flat table is one dir, and a table with no matched row is
+  not rewritten.  No hash is recomputed, so the takedown needs no knowledge
+  of how the build placed its rows.
+* **Stream state** (``_stream_state/mentions``, ``/links`` of a
+  ``--stream --reconcile-every`` out dir): rewritten by the same rule.  The
+  incremental reconciler's group-level partials cannot un-fold a removed
+  row, so a takedown that removes one deletes ``_stream_state/reconcile``
+  and the next pass folds the remaining batches from scratch.
 * **nodes GC**: nodes carry no url; a node whose every supporting edge
   was removed is an orphan and is dropped by a left-semi join against the
   surviving edges' dst set.
 
-The takedown set rides a broadcast anti-join everywhere (it is a bounded
-control-plane set, like the lineage bucket ids).  A claim file fences
+The takedown set rides an IN-set filter everywhere (it is a bounded
+control-plane set read on the driver, like the lineage bucket ids).  A claim file fences
 concurrent takedowns/compactions on the same root (same primitive as
 sources/fs.py lineage fencing); readers racing a swap on plain parquet
 can observe a missing-directory beat — documented emulation semantics
@@ -35,31 +38,24 @@ exists, so the removal is auditable.
 from __future__ import annotations
 
 import time
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
+from pyspark.sql.types import StructType
 
 from ..sources.fs import get_filesystem
+
+# the per-batch state a ``--stream --reconcile-every`` run keeps under its
+# out dir; its ``reconcile`` subdir holds the incremental reconciler's state
+STREAM_STATE = "_stream_state"
 
 # tables rewritten by url; nodes handled separately (GC pass).  Tables
 # missing from the output root, or without a url column
 # (curation_report), are skipped.
 URL_TABLES = ("mentions", "kb_links", "links", "triples", "edges",
-              "curation_flags", "curated")
-
-
-def _affected_buckets(urls_df: DataFrame, n_buckets: int) -> list[int]:
-    """Bucket ids the takedown set hashes into — MUST mirror
-    sources/io.py:bucketize so pruning hits the right partitions."""
-    rows = urls_df.select(
-        F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int").alias("bucket")
-    ).distinct().collect()
-    return sorted(r["bucket"] for r in rows)
-
-
-def _is_bucket_partitioned(fs, path: str) -> bool:
-    return any(d.startswith("bucket=") for d in fs.listdir(path))
+              "curation_flags", "curated",
+              f"{STREAM_STATE}/mentions", f"{STREAM_STATE}/links")
 
 
 def _swap_dirs(fs, live: str, tmp: str) -> None:
@@ -73,39 +69,30 @@ def _swap_dirs(fs, live: str, tmp: str) -> None:
     fs.rmtree(old)
 
 
-def _rewrite_table(spark: SparkSession, fs, path: str, df: DataFrame,
-                   urls_df: DataFrame, n_buckets: int) -> int:
-    """Anti-join ``urls_df`` out of ``df``, the table at ``path``; returns
-    rows removed.  Bucket-partitioned layout -> only affected bucket dirs
-    are rewritten; flat layout -> whole-dir swap."""
+def _leaf_dir(table: str) -> F.Column:
+    """The partition dir of a row's file relative to ``table``'s root:
+    the ``key=value`` components between the table dir and the file
+    (empty for a flat table), still URL-encoded as Spark reports them."""
+    name = table.rsplit("/", 1)[-1]
+    return F.regexp_extract("_metadata.file_path",
+                            rf"^.*/{name}((?:/[^/]*=[^/]*)*)/[^/]*$", 1)
+
+
+def _rewrite_leaves(spark: SparkSession, fs, path: str, schema: StructType,
+                    leaves: list[tuple[str, ...]], keep: F.Column) -> None:
+    """Keep the rows matching ``keep`` in the partition dirs ``leaves``
+    (each a tuple of ``key=value`` names; ``()`` is a flat table's root)
+    of the table at ``path``, whose read ``schema`` is given, in one
+    partitioned write to a tmp dir, then swap each of them in."""
     tmp = path.rstrip("/") + ".__takedown_tmp"
     fs.rmtree(tmp)
-    if _is_bucket_partitioned(fs, path):
-        buckets = _affected_buckets(urls_df, n_buckets)
-        sub = df.filter(F.col("bucket").isin(buckets))  # partition-pruned
-        n_before = sub.count()
-        kept = sub.join(broadcast(urls_df), "url", "left_anti")
-        # partition columns must be written explicitly; bucket came back
-        # as the partition column of the pruned read
-        kept.write.mode("overwrite").partitionBy("bucket") \
-            .parquet(fs.spark_path(tmp))
-        n_after = (
-            spark.read.schema(sub.schema).parquet(fs.spark_path(tmp)).count()
-            if fs.exists(tmp) else 0
-        )
-        for b in buckets:
-            live_b = fs.join(path, f"bucket={b}")
-            tmp_b = fs.join(tmp, f"bucket={b}")
-            if fs.exists(live_b):
-                _swap_dirs(fs, live_b, tmp_b)
-        fs.rmtree(tmp)
-        return n_before - n_after
-    n_before = df.count()
-    kept = df.join(broadcast(urls_df), "url", "left_anti")
-    kept.write.mode("overwrite").parquet(fs.spark_path(tmp))
-    n_after = spark.read.schema(df.schema).parquet(fs.spark_path(tmp)).count()
-    _swap_dirs(fs, path, tmp)
-    return n_before - n_after
+    part_cols = [c.split("=", 1)[0] for c in leaves[0]]
+    spark.read.schema(schema).option("basePath", fs.spark_path(path)).parquet(
+        *(fs.spark_path(fs.join(path, *leaf)) for leaf in leaves)
+    ).filter(keep).write.mode("overwrite").partitionBy(*part_cols).parquet(fs.spark_path(tmp))
+    for leaf in leaves:
+        _swap_dirs(fs, fs.join(path, *leaf), fs.join(tmp, *leaf))
+    fs.rmtree(tmp)
 
 
 def _gc_nodes(spark: SparkSession, fs, nodes_path: str, edges_path: str) -> int:
@@ -125,14 +112,15 @@ def _gc_nodes(spark: SparkSession, fs, nodes_path: str, edges_path: str) -> int:
     return n_before - n_after
 
 
-def takedown_urls(spark: SparkSession, out_dir: str, urls: list[str] | DataFrame,
-                  n_buckets: int = 64) -> dict:
+def takedown_urls(spark: SparkSession, out_dir: str, urls: list[str]) -> dict:
     """Remove every row derived from ``urls`` from the materialized tables
     under ``out_dir``.  Returns ``{table: rows_removed}`` (tables missing
     from the output root are skipped).
 
-    ``n_buckets`` must match the value the tables were built with (the
-    ``--buckets`` CLI arg), or the bucket pruning misses partitions.
+    Whatever a table's layout (flat, or partitioned by ``bucket`` or by
+    ``batch_id``/``pred``), only the partition dirs holding a matched row
+    are rewritten, and they keep their layout; the dirs come from the
+    matched rows' files, so the call takes no build parameter.
 
     Canonicalization caveat: removing a document can change sameAs
     clusters (a bridge mention may be gone).  This pass removes the rows;
@@ -140,19 +128,17 @@ def takedown_urls(spark: SparkSession, out_dir: str, urls: list[str] | DataFrame
     the streaming reconciler's periodic closure (streaming/reconcile.py).
     """
     fs = get_filesystem(out_dir)
-    urls_df = (
-        urls.select("url") if isinstance(urls, DataFrame)
-        else spark.createDataFrame([(u,) for u in urls], "url string")
-    ).distinct().localCheckpoint()
-    if urls_df.limit(1).count() == 0:
+    per_url: dict[str, int] = dict.fromkeys(urls, 0)
+    if not per_url:
         return {}
+    hit = F.col("url").isin(list(per_url))
 
     claim = fs.join(out_dir, ".__takedown_claim")
     if not fs.try_create_claim(claim, "takedown"):
         raise RuntimeError(f"another takedown holds {claim}")
     t0 = time.time()
     removed: dict[str, int] = {}
-    per_url: dict[str, int] = {r["url"]: 0 for r in urls_df.collect()}
+    n_dirs = 0
     try:
         for table in URL_TABLES:
             path = fs.join(out_dir, table)
@@ -163,19 +149,31 @@ def takedown_urls(spark: SparkSession, out_dir: str, urls: list[str] | DataFrame
             # nothing to remove and no schema to read.
             df = (spark.read.parquet(fs.spark_path(path)) if any(
                 not n.startswith(("_", ".")) for n in fs.listdir(path)) else None)
+            removed[table] = 0
             if df is None or "url" not in df.columns:
-                removed[table] = 0
                 continue
             # per-url match accounting (advisor r6 #4): a requested url that
             # normalize_url would collapse differently matches nothing —
-            # surface that instead of silently removing zero rows.
-            # Bounded: one row per request url.
+            # surface that instead of silently removing zero rows.  The same
+            # scan finds the dirs to rewrite.  Bounded: one row per request
+            # url and dir.
+            leaves = set()
             for r in (
-                df.join(broadcast(urls_df), "url", "left_semi")
-                .groupBy("url").count().collect()
+                df.filter(hit).groupBy("url", _leaf_dir(table).alias("leaf"))
+                .count().collect()
             ):
-                per_url[r["url"]] += int(r["count"])
-            removed[table] = _rewrite_table(spark, fs, path, df, urls_df, n_buckets)
+                per_url[r["url"]] += r["count"]
+                removed[table] += r["count"]
+                leaves.add(tuple(unquote(c) for c in r["leaf"].split("/")[1:]))
+            if not leaves:
+                continue
+            if table.startswith(STREAM_STATE):
+                # dropped before the rows, so a rerun after a crash drops it
+                fs.rmtree(fs.join(out_dir, STREAM_STATE, "reconcile"))
+            # a null url matches no takedown url: its row stays
+            _rewrite_leaves(spark, fs, path, df.schema, sorted(leaves),
+                            ~F.coalesce(hit, F.lit(False)))
+            n_dirs += len(leaves)
         nodes_path = fs.join(out_dir, "nodes")
         edges_path = fs.join(out_dir, "edges")
         if fs.exists(nodes_path) and fs.exists(edges_path):
@@ -215,7 +213,7 @@ def takedown_urls(spark: SparkSession, out_dir: str, urls: list[str] | DataFrame
 
         write_stage_metrics(
             lineage_dir, f"takedown-{int(t0)}", "takedown",
-            wall_s=time.time() - t0, n_buckets=n_buckets,
+            wall_s=time.time() - t0, n_buckets=n_dirs,
             # rows of tables only: urls_unmatched counts urls, and the
             # triples_nt lines are the triples rows again
             n_rows=sum(v for k, v in removed.items()

@@ -57,12 +57,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.canonicalize import connected_components
+from ..operators.linking import register_tmp_entities
 from ..sources.fs import get_filesystem
 from ..sources.io import write_table
-
-# the coarse types allowed to mint tmp entities (canonicalize.py's
-# registration gate, linking.py:649-650)
-_REGISTER_TYPES = ("GPE", "LOC", "FAC", "PER", "ORG", "VEH", "WEA")
 
 _STATE_TABLES = {
     "groups": "name_norm string, coarse_type string, r1 string",
@@ -267,19 +264,9 @@ def _assign_entities(state: dict) -> DataFrame:
     wb = Window.partitionBy("cluster_id").orderBy(
         F.col("cnt").desc(), F.length("mention").desc(), F.col("mention").asc()
     )
-    elected = (
-        ct.withColumn("rn", F.row_number().over(wb)).filter(F.col("rn") == 1)
-        .filter(F.col("coarse_type").isin(*_REGISTER_TYPES))
-        .select(
-            "cluster_id",
-            F.concat(
-                F.lit("tmpkb:@"),
-                F.substring(
-                    F.sha1(F.concat_ws("|", F.lower("mention"), "coarse_type")), 1, 12
-                ),
-            ).alias("eid"),
-        )
-    )
+    elected = register_tmp_entities(
+        ct.withColumn("rn", F.row_number().over(wb)).filter(F.col("rn") == 1), "mention"
+    ).select("cluster_id", "eid")
     entities = winners.unionByName(elected)
     return gc.join(entities, "cluster_id").select("name_norm", "coarse_type", "eid")
 

@@ -618,43 +618,104 @@ def test_stream_skips_empty_micro_batch(spark, tmp_path):
 
 
 def test_stream_cli_mode(spark, tmp_path, capsys):
-    """--stream CLI: pages parquet in, batch_id-partitioned triples out; a
-    --takedown on that out dir removes the urls' triples."""
+    """--stream CLI: pages parquet in, batch_id-partitioned triples out.  A
+    --takedown on that out dir removes the urls' rows from the triples and
+    from the stream state, rewriting only the leaves that held one; the
+    next micro-batch's reconcile then re-emits none of them, and the
+    stream's triples equal the batch build's on the remaining pages."""
     import subprocess
     import sys
+    from urllib.parse import unquote
 
     from named_entity_discovery_and_linking_spark.__main__ import main
+    from named_entity_discovery_and_linking_spark.fixtures.generator import kb_dfs
+    from named_entity_discovery_and_linking_spark.plans.graph import kg_build
+    from named_entity_discovery_and_linking_spark.streaming.stream_mentions import (
+        stream_triples,
+    )
 
     pages = pages_df(spark, n_pages=8).coalesce(1)
     in_dir = str(tmp_path / "in")
     pages.write.parquet(in_dir)
     out_dir = tmp_path / "out"
+    state = out_dir / "_stream_state"
     r = subprocess.run(
         [sys.executable, "-m", "named_entity_discovery_and_linking_spark",
          "--stream", "--pages", in_dir, "--out", str(out_dir),
-         "--reconcile-every", "1"],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo",
+         "--reconcile-every", "1", "--incremental-reconcile"],
+        capture_output=True, text=True, timeout=600,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert r.returncode == 0, r.stderr[-2000:]
     got = spark.read.parquet(str(out_dir / "triples"))
     assert got.count() > 0
     assert "batch_id" in got.columns
     # --reconcile-every persisted the per-batch state and ran the global pass
-    assert (out_dir / "_stream_state" / "mentions").exists()
+    assert (state / "mentions").exists() and (state / "reconcile").exists()
     assert got.filter("pred = 'aida:sameAs'").count() > 0
-
     taken = [r["url"] for r in got.select("url").distinct().orderBy("url").limit(2).collect()]
+
+    # two more files of 4 pages each: the first is micro-batch 1 now, whose
+    # leaves the takedown must leave alone; the second follows the takedown
+    kb, al = kb_dfs(spark)
+    later = pages_df(spark, n_pages=16).join(pages.select("url"), "url", "left_anti")
+    first = F.substring("url", -6, 6).cast("int") < 12
+
+    def add_micro_batch(more):
+        more.coalesce(1).write.mode("append").parquet(in_dir)
+        stream_triples(spark, in_dir, str(out_dir / "triples"),
+                       str(out_dir / "_stream_checkpoint"), kb, al, timeout_sec=300,
+                       state_dir=str(state), reconcile_every=1, incremental=True)
+        return spark.read.parquet(str(out_dir / "triples"))
+
+    got = add_micro_batch(later.filter(first))
     n_taken = got.filter(F.col("url").isin(taken)).count()
+    hit = {(r["batch_id"], r["pred"]) for r in
+           got.filter(F.col("url").isin(taken)).select("batch_id", "pred").distinct().collect()}
+
+    def leaves():
+        """(batch_id, pred) -> the leaf's parquet files with their mtimes."""
+        root = out_dir / "triples"
+        out = {}
+        for b in os.listdir(root):
+            for p in os.listdir(root / b) if b.startswith("batch_id=") else ():
+                key = (int(b.split("=", 1)[1]), unquote(p.split("=", 1)[1]))
+                out[key] = sorted((f, os.stat(root / b / p / f).st_mtime_ns)
+                                  for f in os.listdir(root / b / p) if f.endswith(".parquet"))
+        return out
+
+    pre = leaves()
+    assert set(pre) > hit, "every leaf holds a taken-down row"
     urls = tmp_path / "urls.txt"
     urls.write_text("\n".join(taken) + "\n")
     capsys.readouterr()
     assert main(["--takedown", str(urls), "--out", str(out_dir)]) == 0
     removed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert removed["triples"] == n_taken > 0
+    assert removed["_stream_state/mentions"] > 0 and removed["_stream_state/links"] > 0
     assert removed["urls_unmatched"] == 0
     got = spark.read.parquet(str(out_dir / "triples"))
     assert got.filter(F.col("url").isin(taken)).count() == 0
     assert got.count() > 0
+    # the layout is kept, and leaves without a taken-down row are untouched
+    assert all(n.startswith(("batch_id=", "_", "."))
+               for n in os.listdir(out_dir / "triples"))
+    post = leaves()
+    assert {k: v for k, v in pre.items() if k not in hit} == \
+        {k: v for k, v in post.items() if k not in hit}
+    for t in ("mentions", "links"):
+        assert spark.read.parquet(str(state / t)) \
+            .filter(F.col("url").isin(taken)).count() == 0, t
+    # the reconciler's group-level partials still counted the removed rows
+    assert not (state / "reconcile").exists()
+
+    # the next micro-batch's reconcile folds every remaining batch afresh
+    got = add_micro_batch(later.filter(~first))
+    assert got.filter(F.col("url").isin(taken)).count() == 0
+    remaining = pages.unionByName(later).filter(~F.col("url").isin(taken))
+    want = kg_build(remaining, kb, al, promote=False).triples
+    assert sorted(map(tuple, got.select(*want.columns).collect())) == sorted(
+        map(tuple, want.collect()))
 
 
 def test_lineage_resume_prefixfs_scheme(spark, tmp_path):

@@ -1,5 +1,6 @@
 """URL takedown propagation (plans/takedown.py): per-url removal across
-the materialized tables, bucket-pruned rewrites, node GC, idempotence."""
+the materialized tables, rewrites of only the dirs holding a matched row,
+node GC, idempotence."""
 
 import json
 import os
@@ -40,7 +41,7 @@ def test_takedown_removes_every_derived_row(spark, built):
         t: spark.read.parquet(f"{built}/{t}").count()
         for t in ("mentions", "kb_links", "links", "triples", "edges", "nodes")
     }
-    removed = takedown_urls(spark, built, victims, n_buckets=BUCKETS)
+    removed = takedown_urls(spark, built, victims)
     for t in ("mentions", "kb_links", "links", "triples", "edges"):
         df = spark.read.parquet(f"{built}/{t}")
         assert df.filter(F.col("url").isin(victims)).count() == 0, t
@@ -79,7 +80,7 @@ def test_takedown_rewrites_only_affected_buckets(spark, built):
         return snap
 
     pre = {t: snapshot(t) for t in ("mentions", "kb_links")}
-    takedown_urls(spark, built, [victim], n_buckets=BUCKETS)
+    takedown_urls(spark, built, [victim])
     for t in ("mentions", "kb_links"):
         assert snapshot(t) == pre[t], f"{t}: unaffected bucket was rewritten"
 
@@ -87,12 +88,12 @@ def test_takedown_rewrites_only_affected_buckets(spark, built):
 def test_takedown_idempotent_and_empty_noop(spark, built):
     urls = _urls_with_rows(spark, built)
     victims = urls[:2]
-    takedown_urls(spark, built, victims, n_buckets=BUCKETS)  # may be a repeat
-    again = takedown_urls(spark, built, victims, n_buckets=BUCKETS)
+    takedown_urls(spark, built, victims)  # may be a repeat
+    again = takedown_urls(spark, built, victims)
     assert all(v == 0 for k, v in again.items() if k != "urls_unmatched"), again
     # advisor r6 #4: the repeat surfaces that every url matched nothing
     assert again["urls_unmatched"] == len(victims)
-    assert takedown_urls(spark, built, [], n_buckets=BUCKETS) == {}
+    assert takedown_urls(spark, built, []) == {}
 
 
 def test_takedown_cli(spark, built, tmp_path, capsys):
@@ -100,12 +101,14 @@ def test_takedown_cli(spark, built, tmp_path, capsys):
     victim = urls[len(urls) // 2]
     f = tmp_path / "takedown.txt"
     f.write_text(victim + "\n\n")
-    assert main(["--takedown", str(f), "--out", built,
-                 "--buckets", str(BUCKETS)]) == 0
+    # no --buckets: the build's 8 url-hash buckets are not the CLI default,
+    # and the takedown must find the victim's rows without being told
+    assert main(["--takedown", str(f), "--out", built]) == 0
     removed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert removed["triples"] > 0
-    assert spark.read.parquet(f"{built}/triples") \
-        .filter(F.col("url") == victim).count() == 0
+    assert removed["triples"] > 0 and removed["mentions"] > 0
+    for t in ("mentions", "kb_links", "links", "triples", "edges"):
+        assert spark.read.parquet(f"{built}/{t}") \
+            .filter(F.col("url") == victim).count() == 0, t
 
 
 def test_takedown_covers_curation_tables_and_claim_fences(spark, built, tmp_path):
@@ -118,7 +121,7 @@ def test_takedown_covers_curation_tables_and_claim_fences(spark, built, tmp_path
     spark.createDataFrame(
         [(victim, True), ("u-other", False)], "url string, final_keep boolean"
     ).write.mode("overwrite").parquet(f"{built}/curated")
-    removed = takedown_urls(spark, built, [victim], n_buckets=BUCKETS)
+    removed = takedown_urls(spark, built, [victim])
     assert removed["curated"] == 1
     assert spark.read.parquet(f"{built}/curated").count() == 1
 
@@ -127,7 +130,7 @@ def test_takedown_covers_curation_tables_and_claim_fences(spark, built, tmp_path
     assert fs.try_create_claim(claim, "other-driver")
     try:
         with pytest.raises(RuntimeError, match="takedown"):
-            takedown_urls(spark, built, [victim], n_buckets=BUCKETS)
+            takedown_urls(spark, built, [victim])
     finally:
         fs.break_claim_if(claim, "other-driver")
 
@@ -145,8 +148,7 @@ def test_takedown_regenerates_ntriples_and_reports_unmatched(spark, tmp_path):
     assert spark.read.text(f"{out}/triples_nt").count() == tri_before
 
     victim = _urls_with_rows(spark, out)[0]
-    removed = takedown_urls(spark, out, [victim, "http://never-crawled.example/x"],
-                            n_buckets=BUCKETS)
+    removed = takedown_urls(spark, out, [victim, "http://never-crawled.example/x"])
     tri_after = spark.read.parquet(f"{out}/triples").count()
     assert removed["triples"] == tri_before - tri_after > 0
     # the derived export was rewritten in the same pass, line-for-row
@@ -197,7 +199,7 @@ def test_rebuild_after_takedown_drops_under_threshold_promotion(spark, tmp_path)
     # takedown ONE supporting doc: rows for that url vanish, but the
     # promotion persists on the stale corpus-wide count (the window)
     victim = planted_urls[0]
-    takedown_urls(spark, out, [victim], n_buckets=BUCKETS)
+    takedown_urls(spark, out, [victim])
     links = spark.read.parquet(f"{out}/links")
     survivors = links.filter((F.col("subcomponent") == 1) & (F.col("eid") == eid))
     assert survivors.count() == 4
