@@ -9,10 +9,18 @@ connected components over a mention-similarity graph whose edges are
   (i)  same linked KB id (exact), and
   (ii) same normalized NAM text + same coarse type
 
-run as iterative DataFrame joins (alternating large-star/small-star style
-min-label propagation), localCheckpoint()ed per round so the lineage does
-not grow unboundedly.  Bounded rounds; converges in O(log n) for the
-label-propagation variant used here.
+The closure runs at group grain, once: ``group_partials`` contracts the
+mentions to their g1 = (lower(mention), coarse_type) and g2 = (linked eid)
+groups and keeps the per-group aggregates the vote and the election need;
+``assign_entities`` runs ``connected_components`` on the contracted graph
+(one node per group root, not per mention) and gives every g1 group its
+cluster's entity.  The partials are mergeable (``merge_partials``), so the
+batch build (``plans.graph.build_graph``), the full stream reconcile and
+the incremental reconciler (``streaming/reconcile.py``), which folds new
+batches into stored partials, compute the same assignment.
+
+``cluster_link_vote`` and ``elect_best_mention`` are A2 and A3 at mention
+grain, over clusters that CSR frames supply (``plans/csr.py``).
 """
 
 from __future__ import annotations
@@ -160,56 +168,108 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS,
     )
 
 
-def cluster_mentions(mentions: DataFrame, links: DataFrame) -> DataFrame:
-    """(mid, cluster_id) for every NAM mention; singletons keep their own id.
+# g1: the group of a NAM mention's normalized text and coarse type
+G1 = ["name_norm", "coarse_type"]
 
-    Two-level contraction: mentions belong to at most two equivalence groups
-    — g1 = (normalized text, type), g2 = linked eid.  Each group elects a
-    root (min mid); the iterative CC then runs on the CONTRACTED graph of
-    distinct (root1, root2) pairs, which is orders of magnitude smaller than
-    the mention graph (the mega-entity skew guard: a 10M-mention entity
-    contributes ONE contracted node, not 10M edge endpoints).  Mentions are
-    mapped back with a broadcast join.  cluster_id remains the min mid of
-    the component, so results are identical to running CC on the full graph.
-    """
+# per partial: its grouping key and how a column re-aggregates (min of
+# mins, sum of sums and of counts); a partial without one is a set
+_MERGE = {
+    "groups": (G1, {"r1": F.min}),
+    "g2": (["eid"], {"r2": F.min}),
+    "gedges": (G1 + ["eid"], {}),
+    "votes": (G1 + ["eid", "cname"], {"vote": F.sum}),
+    "texts": (G1 + ["mention"], {"cnt": F.sum, "min_mid": F.min}),
+}
+
+
+def group_partials(mentions: DataFrame, links: DataFrame) -> dict:
+    """The per-group aggregates of the NAM ``mentions`` and their rank-1
+    ``links`` that the entity assignment needs:
+
+      groups  (name_norm, coarse_type, r1)        g1 root: min mid
+      g2      (eid, r2)                           g2 root: min linked mid
+      gedges  (name_norm, coarse_type, eid)       distinct g1-eid pairs
+      votes   (name_norm, coarse_type, eid, cname, vote)   sum(confidence)
+      texts   (name_norm, coarse_type, mention, cnt, min_mid)
+
+    Every column is a min, a sum, a count or a set member, so the partials
+    of two inputs re-aggregate to those of their union (``merge_partials``).
+    All are groupBy aggregates, never a window: a hot entity ('Ukraine'
+    across a crawl) is one combined row per group, not a sorted partition
+    of corpus size."""
     nam = mentions.filter(F.col("category") == "NAM").select(
-        "mid", F.lower(F.col("mention")).alias("name_norm"), "coarse_type"
-    )
-    top_links = links.filter(F.col("rank") == 1).select("mid", "eid")
+        "mid", F.lower(F.col("mention")).alias("name_norm"), "coarse_type", "mention")
+    top = links.filter((F.col("rank") == 1) & F.col("eid").isNotNull())
+    linked = nam.join(top.select("mid", "eid", "cname", "confidence"), "mid")
+    return {
+        "groups": nam.groupBy(*G1).agg(F.min("mid").alias("r1")),
+        "g2": linked.groupBy("eid").agg(F.min("mid").alias("r2")),
+        "gedges": linked.select(*G1, "eid").distinct(),
+        "votes": linked.groupBy(*G1, "eid", "cname").agg(F.sum("confidence").alias("vote")),
+        "texts": nam.groupBy(*G1, "mention").agg(
+            F.count("*").alias("cnt"), F.min("mid").alias("min_mid")),
+    }
 
-    # group roots via groupBy + broadcast join back, NOT a window: a window
-    # partitioned by name/eid sorts one giant partition per hot entity
-    # (measured as a ~100s serial critical path at 2.5M pages); the groupBy
-    # aggregates map-side and its output is one row per GROUP — tiny, so it
-    # broadcasts
-    # join strategy left to AQE: the group table broadcasts when it fits
-    # (runtime size check) and falls back to a skew-split shuffle join when
-    # the name universe is too large to broadcast (true web scale)
-    g1 = nam.groupBy("name_norm", "coarse_type").agg(F.min("mid").alias("r1"))
-    with_r1 = nam.join(g1, ["name_norm", "coarse_type"])
-    g2 = top_links.groupBy("eid").agg(F.min("mid").alias("r2"))
-    link_r2 = top_links.join(g2, "eid").select("mid", "r2")
-    m = with_r1.join(link_r2, "mid", "left")
 
-    contracted = (
-        m.filter(F.col("r2").isNotNull() & (F.col("r1") != F.col("r2")))
+def merge_partials(state: dict, delta: dict) -> dict:
+    """``group_partials`` of the union of two inputs, from the partials of
+    each: the incremental reconciler's fold of new batches into its state."""
+    out = {}
+    for name, (keys, aggs) in _MERGE.items():
+        both = state[name].unionByName(delta[name])
+        out[name] = (both.groupBy(*keys).agg(*(f(c).alias(c) for c, f in aggs.items()))
+                     if aggs else both.distinct())
+    return out
+
+
+def assign_entities(partials: dict) -> DataFrame:
+    """(name_norm, coarse_type, eid, cname): each g1 group's entity.
+
+    Clusters are the connected components of the contracted graph whose
+    nodes are the g1 and g2 roots and whose edges are the g1-eid pairs; a
+    cluster is labelled by its min root, which is its min mention id.  Each
+    cluster then gets one entity: the A2 vote (the eid with the largest
+    summed confidence, ties to the smaller eid) if a member is linked, else
+    the A3 election (the most frequent mention text, ties to the longer,
+    then the smaller text; the type of its min-mid mention) registered in
+    the temporary KB (``linking.register_tmp_entities``; a cluster whose
+    elected type fails the gate gets no entity).  Every mention of a g1
+    group is in the same cluster, so the per-group partials add up to the
+    cluster's vote and text counts."""
+    groups = partials["groups"]
+    edges = (
+        partials["gedges"].join(groups, G1).join(partials["g2"], "eid")
+        .filter(F.col("r1") != F.col("r2"))
         .select(F.col("r1").alias("src"), F.col("r2").alias("dst"))
         .distinct()
     )
-    comp = connected_components(contracted)  # tiny: one node per group root
-    mapped = (
-        m.join(F.broadcast(comp.withColumnRenamed("mid", "r1")), "r1", "left")
-        .withColumn("c1", F.coalesce("cluster_id", "r1"))
-        .drop("cluster_id")
-        .join(
-            F.broadcast(comp.selectExpr("mid as r2", "cluster_id as c2")), "r2", "left"
-        )
-        .withColumn(
-            "cluster_id",
-            F.least(F.col("c1"), F.coalesce(F.col("c2"), F.col("c1"), F.col("r2"))),
-        )
+    comp = connected_components(edges)  # tiny: one node per group root
+    gc = groups.join(F.broadcast(comp.withColumnRenamed("mid", "r1")), "r1", "left").select(
+        *G1, F.coalesce("cluster_id", "r1").alias("cluster_id"),
+    ).localCheckpoint()
+
+    per_eid = (
+        partials["votes"].join(gc, G1)
+        .groupBy("cluster_id", "eid", "cname").agg(F.sum("vote").alias("vote"))
     )
-    return mapped.select("mid", F.coalesce("cluster_id", "mid").alias("cluster_id"))
+    w = Window.partitionBy("cluster_id").orderBy(F.col("vote").desc(), F.col("eid").asc())
+    winners = (per_eid.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+               .select("cluster_id", "eid", "cname"))
+
+    unlinked = gc.select("cluster_id").distinct().join(winners, "cluster_id", "left_anti")
+    counts = (
+        partials["texts"].join(gc, G1).join(unlinked, "cluster_id")
+        .groupBy("cluster_id", "mention")
+        .agg(F.sum("cnt").alias("cnt"),
+             F.expr("min_by(coarse_type, min_mid)").alias("coarse_type"))
+    )
+    wb = Window.partitionBy("cluster_id").orderBy(
+        F.col("cnt").desc(), F.length("mention").desc(), F.col("mention").asc()
+    )
+    elected = register_tmp_entities(
+        counts.withColumn("rn", F.row_number().over(wb)).filter(F.col("rn") == 1), "mention"
+    ).select("cluster_id", "eid", F.col("mention").alias("cname"))
+    return gc.join(winners.unionByName(elected), "cluster_id").select(*G1, "eid", "cname")
 
 
 def cluster_link_vote(clusters: DataFrame, links: DataFrame) -> DataFrame:
@@ -262,16 +322,3 @@ def elect_best_mention(clusters: DataFrame, mentions: DataFrame) -> DataFrame:
     return best.join(typed, ["cluster_id", "mention"]).select(
         "cluster_id", F.col("mention").alias("best_mention"), "coarse_type"
     )
-
-
-def canonical_entities(clusters: DataFrame, links: DataFrame, mentions: DataFrame) -> DataFrame:
-    """Per cluster: the voted KB entity (A2) if any member linked, else a
-    deterministic tmp entity from the elected best mention (A3 ->
-    linking.py:654-666 registration, sha1 ids per A6)."""
-    voted = cluster_link_vote(clusters, links).select("cluster_id", "eid", "cname").distinct()
-    linked_clusters = voted.select("cluster_id").distinct()
-    unlinked = clusters.select("cluster_id").distinct().join(linked_clusters, "cluster_id", "left_anti")
-    elected = register_tmp_entities(
-        elect_best_mention(clusters.join(unlinked, "cluster_id"), mentions), "best_mention"
-    ).select("cluster_id", "eid", F.col("best_mention").alias("cname"))
-    return voted.unionByName(elected)

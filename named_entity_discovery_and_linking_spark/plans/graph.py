@@ -1,4 +1,4 @@
-"""E3: links + clusters -> triples / nodes / edges tables; ``kg_build`` (E1-E3).
+"""E3: links + entity assignment -> triples / nodes / edges; ``kg_build`` (E1-E3).
 
 The reference serializes per-mention ``xref`` records into CSR JSON
 (linking.py:557-700); our comparison surface is an explicit triples table
@@ -15,12 +15,12 @@ from collections import namedtuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.canonicalize import canonical_entities, cluster_mentions
+from ..operators.canonicalize import assign_entities, group_partials
 
 
-def build_triples(mentions: DataFrame, links: DataFrame, clusters: DataFrame,
-                  entities: DataFrame) -> DataFrame:
-    """(subj, pred, obj, conf, url, char_begin, char_end)."""
+def build_triples(mentions: DataFrame, links: DataFrame, assign: DataFrame) -> DataFrame:
+    """(subj, pred, obj, conf, url, char_begin, char_end); ``assign`` is
+    ``canonicalize.assign_entities``' output."""
     m = mentions.select("mid", "url", "mention", "type", "score", "char_begin", "char_end")
     t_type = m.select(
         F.col("mid").alias("subj"), F.lit("rdf:type").alias("pred"),
@@ -39,16 +39,18 @@ def build_triples(mentions: DataFrame, links: DataFrame, clusters: DataFrame,
         "url", "char_begin", "char_end",
     )
     return (t_type.unionByName(t_anchor).unionByName(t_link)
-            .unionByName(same_as_triples(m, clusters, entities)))
+            .unionByName(same_as_triples(mentions, assign)))
 
 
-def same_as_triples(mentions: DataFrame, clusters: DataFrame, entities: DataFrame,
-                    *carry: str) -> DataFrame:
-    """``aida:sameAs`` rows: clustered mention -> its cluster's canonical
-    entity, plus the mention columns ``carry`` (reconcile's ``batch_id``)."""
+def same_as_triples(mentions: DataFrame, assign: DataFrame, *carry: str) -> DataFrame:
+    """``aida:sameAs`` rows: NAM mention -> the entity ``assign`` gives its
+    (lower(mention), coarse_type) group, plus the mention columns ``carry``
+    (a reconcile's ``batch_id``).  The only sameAs emission: the batch
+    build and both stream reconcilers write these rows."""
     return (
-        clusters.join(entities, "cluster_id")
-        .join(mentions.select("mid", "url", "char_begin", "char_end", *carry), "mid")
+        mentions.filter(F.col("category") == "NAM")
+        .withColumn("name_norm", F.lower(F.col("mention")))
+        .join(assign, ["name_norm", "coarse_type"])
         .select(
             F.col("mid").alias("subj"), F.lit("aida:sameAs").alias("pred"),
             F.col("eid").alias("obj"), F.lit(1.0).alias("conf"),
@@ -100,14 +102,14 @@ def graph_stats(nodes: DataFrame, edges: DataFrame, top_k: int = 10) -> dict:
 def build_graph(mentions: DataFrame, links: DataFrame):
     """Full E3: returns (triples, nodes, edges) DataFrames.
 
-    clusters/entities are localCheckpoint()ed: they fan out into 3+ union
-    branches of the triples frame plus nodes — without materialization every
-    branch re-runs the contraction joins and the CC mapping (measured ~30
-    redundant jobs per kg_triples run at bench scale)."""
-    clusters = cluster_mentions(mentions, links).localCheckpoint()
-    entities = canonical_entities(clusters, links, mentions).localCheckpoint()
-    triples = build_triples(mentions, links, clusters, entities)
-    nodes = entities.select(
+    The entity assignment, ``assign_entities(group_partials(mentions,
+    links))``, is computed straight from the whole input (not folded into
+    an empty reconcile state, which adds a re-aggregation per partial) and
+    localCheckpoint()ed once: it feeds the sameAs rows, and through them
+    the edges, and the nodes, the distinct (eid, cname) pairs."""
+    assign = assign_entities(group_partials(mentions, links)).localCheckpoint()
+    triples = build_triples(mentions, links, assign)
+    nodes = assign.select(
         F.col("eid").alias("node_id"), F.col("cname").alias("canonical_name")
     ).distinct()
     edges = (

@@ -22,8 +22,9 @@ the same scale posture:
   row, so a takedown that removes one deletes ``_stream_state/reconcile``
   and the next pass folds the remaining batches from scratch.
 * **nodes GC**: nodes carry no url; a node whose every supporting edge
-  was removed is an orphan and is dropped by a left-semi join against the
-  surviving edges' dst set.
+  was removed is an orphan.  One left-anti count against the surviving
+  edges' dst set finds the orphans, and ``nodes`` is rewritten (left-semi
+  join, tmp + swap) only when there is one.
 
 The takedown set rides an IN-set filter everywhere (it is a bounded
 control-plane set read on the driver, like the lineage bucket ids).  A claim file fences
@@ -96,20 +97,22 @@ def _rewrite_leaves(spark: SparkSession, fs, path: str, schema: StructType,
 
 
 def _gc_nodes(spark: SparkSession, fs, nodes_path: str, edges_path: str) -> int:
-    """Drop nodes no surviving edge references (orphans after removal)."""
+    """Drop nodes no surviving edge references (orphans after removal).
+    The orphans are counted on every call, so a rerun after a crash still
+    drops them; ``nodes`` is rewritten only when there is one."""
     nodes = spark.read.parquet(fs.spark_path(nodes_path))
     live_eids = (
         spark.read.parquet(fs.spark_path(edges_path))
         .select(F.col("dst").alias("node_id")).distinct()
     )
-    kept = nodes.join(live_eids, "node_id", "left_semi")
-    n_before = nodes.count()
-    tmp = nodes_path.rstrip("/") + ".__takedown_tmp"
-    fs.rmtree(tmp)
-    kept.write.mode("overwrite").parquet(fs.spark_path(tmp))
-    n_after = spark.read.schema(nodes.schema).parquet(fs.spark_path(tmp)).count()
-    _swap_dirs(fs, nodes_path, tmp)
-    return n_before - n_after
+    n_orphans = nodes.join(live_eids, "node_id", "left_anti").count()
+    if n_orphans:
+        tmp = nodes_path.rstrip("/") + ".__takedown_tmp"
+        fs.rmtree(tmp)
+        nodes.join(live_eids, "node_id", "left_semi").write.mode("overwrite").parquet(
+            fs.spark_path(tmp))
+        _swap_dirs(fs, nodes_path, tmp)
+    return n_orphans
 
 
 def takedown_urls(spark: SparkSession, out_dir: str, urls: list[str]) -> dict:

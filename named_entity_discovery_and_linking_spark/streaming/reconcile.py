@@ -3,42 +3,30 @@ plus the stale-leaf tombstone pass (judge r4 next-round #4 / ADVICE r4).
 
 ``reconcile_triples`` (stream_mentions.py) recomputes the global closure by
 re-reading EVERY persisted batch's mentions+links — correct, idempotent, but
-O(history) per pass.  This module keeps a compact GROUP-LEVEL state between
-passes so each pass reads mention-level data only for (a) batches not yet
-folded into the state and (b) batches whose entity assignment actually
-changed — per-pass input scales with distinct entities, not with stream
-history.
+O(history) per pass.  This module keeps the group partials of
+``operators.canonicalize`` between passes, so each pass reads mention-level
+data only for (a) batches not yet folded into the state and (b) batches
+whose entity assignment actually changed — per-pass input scales with
+distinct entities, not with stream history.
 
-Why group-level state suffices for EXACT equality with the full recompute
-(pinned by test_incremental_reconcile_matches_full):
+A pass is the batch closure applied to the new batches as one delta:
 
-- ``cluster_mentions`` already contracts mentions to g1=(lower(mention),
-  coarse_type) and g2=(linked eid) group roots (min mid per group) before
-  the iterative CC; a mention's groups never change after it is written, so
-  the roots are a running ``min`` and the contracted edge set is the
-  distinct (g1-key, eid) co-occurrence set — both mergeable aggregates.
-- The CC label is the min root mid of the component == the min mention mid
-  (roots are group minima), so labels match the full recompute exactly.
-- ``cluster_link_vote``'s per-cluster sums and ``elect_best_mention``'s
-  per-text counts decompose over g1 groups (every mention of a g1 group is
-  in the same cluster), so per-group partial aggregates (sum/max/count/min)
-  re-aggregate to the identical cluster-level values.
-- The sameAs output row for a mention depends only on its g1 group's
-  entity assignment (obj = the cluster's entity eid), so only batches
-  containing a group whose assignment CHANGED need their leaf partitions
-  rewritten; ``group_batches`` (distinct (group, batch_id)) prunes the
-  mention-level re-read to exactly those.
+  assign = assign_entities(merge_partials(state, group_partials(new batches)))
+
+and ``merge_partials`` re-aggregates min / sum / count / set partials
+exactly, so ``assign`` is ``assign_entities(group_partials(every batch))``,
+the full recompute's — whatever the batches' order and grouping into
+passes.  A mention's sameAs row depends only on its g1 group's entity, so
+only batches containing a group whose assignment CHANGED need their leaf
+partitions rewritten; ``group_batches`` (distinct (group, batch_id)) prunes
+the mention-level re-read to exactly those.
 
 State layout (``<state_dir>/reconcile/v=<K>/``, versioned — the pass writes
 a complete new version then atomically publishes ``_CURRENT`` via the fs
 abstraction, so a crash mid-persist replays the same delta against the old
 state instead of double-counting):
 
-  groups        (name_norm, coarse_type, r1)             running min mid
-  g2            (eid, r2)                                running min mid
-  gedges        (name_norm, coarse_type, eid)            distinct
-  votes         (name_norm, coarse_type, eid, cname, vote, best_conf)
-  texts         (name_norm, coarse_type, mention, cnt, min_mid)
+  groups, g2, gedges, votes, texts               ``group_partials``
   group_batches (name_norm, coarse_type, batch_id)       distinct
   assign        (name_norm, coarse_type, eid)            last pass's output
   done          (batch_id)                               batches folded in
@@ -53,11 +41,11 @@ from __future__ import annotations
 import time
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.canonicalize import connected_components
-from ..operators.linking import register_tmp_entities
+from ..operators.canonicalize import G1, assign_entities, group_partials, merge_partials
+from ..plans.graph import same_as_triples
 from ..sources.fs import get_filesystem
 from ..sources.io import write_table
 
@@ -65,8 +53,7 @@ _STATE_TABLES = {
     "groups": "name_norm string, coarse_type string, r1 string",
     "g2": "eid string, r2 string",
     "gedges": "name_norm string, coarse_type string, eid string",
-    "votes": ("name_norm string, coarse_type string, eid string, "
-              "cname string, vote double, best_conf double"),
+    "votes": "name_norm string, coarse_type string, eid string, cname string, vote double",
     "texts": ("name_norm string, coarse_type string, mention string, "
               "cnt long, min_mid string"),
     "group_batches": "name_norm string, coarse_type string, batch_id long",
@@ -163,114 +150,6 @@ def drop_stale_sameas_leaves(triples_dir: str, live_batches: set[int]) -> list[i
     return dropped
 
 
-def _fold_delta(state: dict, new_m: DataFrame, new_links: DataFrame) -> dict:
-    """Merge the new batches' NAM mentions + rank-1 links into the group
-    state.  Every merge is a re-aggregation of mergeable partials (min /
-    sum / max / distinct-union), so folding batches one at a time or all at
-    once yields the identical state."""
-    nam = new_m.filter(F.col("category") == "NAM").select(
-        "mid", F.lower(F.col("mention")).alias("name_norm"),
-        "coarse_type", "mention", "batch_id",
-    )
-    top = new_links.filter(F.col("rank") == 1).select("mid", "eid", "cname", "confidence")
-    keyed = nam.join(top, "mid", "left")
-
-    groups = (
-        state["groups"]
-        .unionByName(nam.groupBy("name_norm", "coarse_type").agg(F.min("mid").alias("r1")))
-        .groupBy("name_norm", "coarse_type").agg(F.min("r1").alias("r1"))
-    )
-    linked = keyed.filter(F.col("eid").isNotNull())
-    g2 = (
-        state["g2"]
-        .unionByName(linked.groupBy("eid").agg(F.min("mid").alias("r2")))
-        .groupBy("eid").agg(F.min("r2").alias("r2"))
-    )
-    gedges = (
-        state["gedges"]
-        .unionByName(linked.select("name_norm", "coarse_type", "eid"))
-        .distinct()
-    )
-    votes = (
-        state["votes"]
-        .unionByName(
-            linked.groupBy("name_norm", "coarse_type", "eid", "cname")
-            .agg(F.sum("confidence").alias("vote"), F.max("confidence").alias("best_conf"))
-        )
-        .groupBy("name_norm", "coarse_type", "eid", "cname")
-        .agg(F.sum("vote").alias("vote"), F.max("best_conf").alias("best_conf"))
-    )
-    texts = (
-        state["texts"]
-        .unionByName(
-            nam.groupBy("name_norm", "coarse_type", "mention")
-            .agg(F.count("*").alias("cnt"), F.min("mid").alias("min_mid"))
-        )
-        .groupBy("name_norm", "coarse_type", "mention")
-        .agg(F.sum("cnt").alias("cnt"), F.min("min_mid").alias("min_mid"))
-    )
-    group_batches = (
-        state["group_batches"]
-        .unionByName(nam.select("name_norm", "coarse_type", "batch_id").distinct())
-        .distinct()
-    )
-    return {"groups": groups, "g2": g2, "gedges": gedges, "votes": votes,
-            "texts": texts, "group_batches": group_batches}
-
-
-def _assign_entities(state: dict) -> DataFrame:
-    """(name_norm, coarse_type, eid): each g1 group's entity under the
-    CURRENT global closure — the only thing a mention's sameAs row depends
-    on.  Mirrors cluster_mentions + canonical_entities at group grain."""
-    # caller already checkpointed the merged state — no second copy needed
-    groups = state["groups"]
-    edges = (
-        state["gedges"]
-        .join(groups, ["name_norm", "coarse_type"])
-        .join(state["g2"], "eid")
-        .filter(F.col("r1") != F.col("r2"))
-        .select(F.col("r1").alias("src"), F.col("r2").alias("dst"))
-        .distinct()
-    )
-    comp = connected_components(edges)
-    gc = groups.join(
-        F.broadcast(comp.withColumnRenamed("mid", "r1")), "r1", "left"
-    ).select(
-        "name_norm", "coarse_type",
-        F.coalesce("cluster_id", "r1").alias("cluster_id"),
-    ).localCheckpoint()
-
-    per_eid = (
-        state["votes"].join(gc, ["name_norm", "coarse_type"])
-        .groupBy("cluster_id", "eid", "cname")
-        .agg(F.sum("vote").alias("vote"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("cluster_id").orderBy(F.col("vote").desc(), F.col("eid").asc())
-    winners = (
-        per_eid.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-        .select("cluster_id", "eid")
-    )
-
-    unlinked = gc.select("cluster_id").distinct().join(winners, "cluster_id", "left_anti")
-    ct = (
-        state["texts"].join(gc, ["name_norm", "coarse_type"])
-        .join(unlinked, "cluster_id")
-        .groupBy("cluster_id", "mention")
-        .agg(F.sum("cnt").alias("cnt"),
-             F.expr("min_by(coarse_type, min_mid)").alias("coarse_type"))
-    )
-    wb = Window.partitionBy("cluster_id").orderBy(
-        F.col("cnt").desc(), F.length("mention").desc(), F.col("mention").asc()
-    )
-    elected = register_tmp_entities(
-        ct.withColumn("rn", F.row_number().over(wb)).filter(F.col("rn") == 1), "mention"
-    ).select("cluster_id", "eid")
-    entities = winners.unionByName(elected)
-    return gc.join(entities, "cluster_id").select("name_norm", "coarse_type", "eid")
-
-
 def reconcile_triples_incremental(
     spark: SparkSession, triples_dir: str, state_dir: str,
 ) -> dict:
@@ -293,57 +172,47 @@ def reconcile_triples_incremental(
     mentions_path = fs.spark_path(fs.join(state_dir, "mentions"))
     links_path = fs.spark_path(fs.join(state_dir, "links"))
 
+    merged = {k: v for k, v in state.items() if k not in ("assign", "done")}
     if new_batches:
         new_m = spark.read.parquet(mentions_path).filter(
             F.col("batch_id").isin(new_batches))
         new_l = spark.read.parquet(links_path).filter(
             F.col("batch_id").isin(new_batches))
-        merged = _fold_delta(state, new_m, new_l)
-    else:
-        merged = {k: state[k] for k in
-                  ("groups", "g2", "gedges", "votes", "texts", "group_batches")}
+        merged.update(merge_partials(state, group_partials(new_m, new_l)))
+        merged["group_batches"] = merged["group_batches"].unionByName(
+            new_m.filter(F.col("category") == "NAM")
+            .select(F.lower(F.col("mention")).alias("name_norm"), "coarse_type", "batch_id")
+        ).distinct()
     # checkpoint the merged state once: assign + persist + change-detection
     # all fan out from these frames.  Lazy (eager=False) so materialization
     # rides the first consuming job instead of paying six dedicated
     # local-mode job submissions up front
     merged = {k: v.localCheckpoint(eager=False) for k, v in merged.items()}
 
-    assign = _assign_entities(merged).localCheckpoint()
+    assign = assign_entities(merged).select(*G1, "eid").localCheckpoint()
 
     prev = state["assign"]
     changed_groups = (
         assign.withColumnRenamed("eid", "new_eid")
-        .join(prev.withColumnRenamed("eid", "old_eid"),
-              ["name_norm", "coarse_type"], "full_outer")
+        .join(prev.withColumnRenamed("eid", "old_eid"), G1, "full_outer")
         .filter(
             F.col("new_eid").isNull() | F.col("old_eid").isNull()
             | (F.col("new_eid") != F.col("old_eid"))
         )
-        .select("name_norm", "coarse_type")
+        .select(*G1)
         .localCheckpoint()
     )
     affected = {
         r["batch_id"]
-        for r in merged["group_batches"].join(
-            changed_groups, ["name_norm", "coarse_type"]
-        ).select("batch_id").distinct().collect()
+        for r in merged["group_batches"].join(changed_groups, G1)
+        .select("batch_id").distinct().collect()
     } | set(new_batches)
 
     rewritten: set[int] = set()
     if affected:
         m = spark.read.parquet(mentions_path).filter(
             F.col("batch_id").isin(sorted(affected)))
-        t_same = (
-            m.filter(F.col("category") == "NAM")
-            .withColumn("name_norm", F.lower(F.col("mention")))
-            .join(assign, ["name_norm", "coarse_type"])
-            .select(
-                F.col("mid").alias("subj"), F.lit("aida:sameAs").alias("pred"),
-                F.col("eid").alias("obj"), F.lit(1.0).alias("conf"),
-                "url", "char_begin", "char_end", "batch_id",
-            )
-            .localCheckpoint()
-        )
+        t_same = same_as_triples(m, assign, "batch_id").localCheckpoint()
         write_table(t_same, triples_dir, partition_by=["batch_id", "pred"])
         rewritten = {r["batch_id"] for r in
                      t_same.select("batch_id").distinct().collect()}

@@ -176,35 +176,34 @@ def reconcile_triples(spark: SparkSession, triples_dir: str, state_dir: str) -> 
     aida:sameAs closure over ALL batches' persisted mentions+links and
     rewrite each batch_id partition idempotently.
 
-    The global pass reuses the batch machinery unchanged —
-    cluster_mentions contracts the mention graph to (name, type) / eid group
-    roots before the iterative CC, so the cross-batch CC runs on group
-    roots, not mentions (the contracted graph the r3 verdict points at).
-    The triples table is partitioned by (batch_id, pred), so this writes
-    ONLY the new global sameAs rows and dynamic partition overwrite
-    replaces exactly the (batch_id=*, pred=aida:sameAs) leaf partitions —
-    per-mention rows are never read or rewritten, the rewrite volume is
-    O(sameAs), and re-running on a timer is idempotent.  A batch whose
-    global closure yields ZERO sameAs rows would keep its stale leaf
+    The global pass is the batch build's closure on every batch at once:
+    ``group_partials`` -> ``assign_entities`` (operators/canonicalize.py,
+    whose CC runs on group roots, not mentions) -> ``same_as_triples`` ->
+    tombstone.  The triples table is partitioned by (batch_id, pred), so
+    this writes ONLY the new global sameAs rows and dynamic partition
+    overwrite replaces exactly the (batch_id=*, pred=aida:sameAs) leaf
+    partitions — per-mention rows are never read or rewritten, the rewrite
+    volume is O(sameAs), and re-running on a timer is idempotent.  A batch
+    whose global closure yields ZERO sameAs rows would keep its stale leaf
     (dynamic overwrite cannot write an empty partition) — the closing
     ``drop_stale_sameas_leaves`` pass tombstones exactly those leaves
     (judge r4 #4 / ADVICE r4).  After reconciliation the streamed triple
     set equals the batch path's (promote=False flavor) on the same pages —
     pinned by test_stream_reconcile_matches_batch."""
-    from ..operators.canonicalize import canonical_entities, cluster_mentions
+    from ..operators.canonicalize import assign_entities, group_partials
     from ..plans.graph import same_as_triples
     from ..sources.fs import get_filesystem
     from ..sources.io import write_table
     from .reconcile import drop_stale_sameas_leaves
 
     fs = get_filesystem(state_dir)
-    mentions = spark.read.parquet(
-        fs.spark_path(fs.join(state_dir, "mentions"))).localCheckpoint()
-    links = spark.read.parquet(
-        fs.spark_path(fs.join(state_dir, "links"))).localCheckpoint()
-    clusters = cluster_mentions(mentions, links).localCheckpoint()
-    entities = canonical_entities(clusters, links, mentions).localCheckpoint()
-    t_same = same_as_triples(mentions, clusters, entities, "batch_id").localCheckpoint()
+
+    def read(table: str) -> DataFrame:
+        return spark.read.parquet(fs.spark_path(fs.join(state_dir, table)))
+
+    mentions = read("mentions").localCheckpoint()
+    assign = assign_entities(group_partials(mentions, read("links"))).localCheckpoint()
+    t_same = same_as_triples(mentions, assign, "batch_id").localCheckpoint()
     write_table(t_same, triples_dir, partition_by=["batch_id", "pred"])
     live = {r["batch_id"] for r in t_same.select("batch_id").distinct().collect()}
     drop_stale_sameas_leaves(triples_dir, live)

@@ -3,11 +3,20 @@
 from pyspark.sql import functions as F
 
 from named_entity_discovery_and_linking_spark.operators.canonicalize import (
+    assign_entities,
     cluster_link_vote,
-    cluster_mentions,
     connected_components,
     elect_best_mention,
+    group_partials,
+    merge_partials,
 )
+
+
+def _entities(mentions, links):
+    """{mid: eid}: each mention's entity under the group-grain assignment."""
+    assign = assign_entities(group_partials(mentions, links))
+    return {r["mid"]: r["eid"] for r in mentions.withColumn("name_norm", F.lower("mention"))
+            .join(assign, ["name_norm", "coarse_type"]).collect()}
 
 
 def test_connected_components_chain(spark):
@@ -69,9 +78,10 @@ def test_cluster_mentions_same_text_same_cluster(spark):
     links = spark.createDataFrame(
         [], "mid string, eid string, cname string, confidence double, rank int"
     )
-    cc = {r["mid"]: r["cluster_id"] for r in cluster_mentions(mentions, links).collect()}
-    assert cc["m1"] == cc["m2"]
-    assert cc["m3"] != cc["m1"]
+    # no member is linked: each cluster elects its own temporary-KB entity
+    ent = _entities(mentions, links)
+    assert ent["m1"] == ent["m2"]
+    assert ent["m3"] != ent["m1"]
 
 
 def test_same_eid_links_merge_clusters(spark):
@@ -83,22 +93,52 @@ def test_same_eid_links_merge_clusters(spark):
         [("m1", "refkb:E0", "Kyiv", 1.0, 1), ("m2", "refkb:E0", "Kyiv", 1.0, 1)],
         "mid string, eid string, cname string, confidence double, rank int",
     )
-    cc = {r["mid"]: r["cluster_id"] for r in cluster_mentions(mentions, links).collect()}
-    assert cc["m1"] == cc["m2"]
+    ent = _entities(mentions, links)
+    assert ent["m1"] == ent["m2"]
+
+
+def test_merge_partials_of_halves_equals_whole(spark):
+    """The incremental reconciler's exactness: the partials of two halves,
+    merged, assign the same entities as the partials of the whole, also
+    where a cluster and its vote span both halves."""
+    rows = [  # (half, mid, mention, coarse_type, eid, confidence)
+        (0, "m1", "Kyiv", "GPE", "refkb:E1", 0.9),
+        (0, "m2", "Kiev", "GPE", "refkb:E2", 0.5),
+        (0, "m3", "Acme", "ORG", None, None),
+        (1, "m4", "Kiev", "GPE", "refkb:E2", 0.6),
+        (1, "m5", "Kyiv", "GPE", "refkb:E2", 0.3),  # bridges kyiv and kiev
+        (1, "m6", "ACME", "ORG", None, None),
+        (1, "m7", "Acme Corp", "ORG", None, None),
+    ]
+    mentions = spark.createDataFrame(
+        [(h, mid, "NAM", text, ct) for h, mid, text, ct, _, _ in rows],
+        "half int, mid string, category string, mention string, coarse_type string")
+    links = spark.createDataFrame(
+        [(h, mid, eid, eid[6:], conf, 1) for h, mid, _, _, eid, conf in rows if eid],
+        "half int, mid string, eid string, cname string, confidence double, rank int")
+
+    def half(df, h):
+        return df.filter(F.col("half") == h)
+
+    whole = sorted(map(tuple, assign_entities(group_partials(mentions, links)).collect()))
+    merged = sorted(map(tuple, assign_entities(merge_partials(
+        group_partials(half(mentions, 0), half(links, 0)),
+        group_partials(half(mentions, 1), half(links, 1)))).collect()))
+    assert merged == whole
+    ent = {(r[0], r[1]): r[2] for r in whole}
+    # summed over both halves E2 (1.4) outvotes E1 (0.9); half 0 alone
+    # would give kyiv E1
+    assert ent[("kyiv", "GPE")] == ent[("kiev", "GPE")] == "refkb:E2"
+    assert len(whole) == 4
 
 
 def test_mega_cluster_contraction_handles_hot_entity(spark):
     """Mega-entity skew guard: 100k NAM mentions of ONE name contract to a
     single graph node, cluster in bounded time, and the A2/A3 path elects
-    once.  Guards the claim in cluster_mentions' docstring — at 100 TB a
+    once.  Guards the claim in group_partials' docstring — at 100 TB a
     hot entity ('Ukraine' across a crawl) must contribute one contracted
     node, never a window partition of corpus size."""
     import time
-
-    from named_entity_discovery_and_linking_spark.operators.canonicalize import (
-        canonical_entities,
-        cluster_mentions,
-    )
 
     n = 100_000
     mentions = spark.range(n).select(
@@ -111,10 +151,10 @@ def test_mega_cluster_contraction_handles_hot_entity(spark):
     links = spark.createDataFrame([], "mid string, eid string, cname string, "
                                       "confidence double, rank int")
     t0 = time.time()
-    clusters = cluster_mentions(mentions, links).localCheckpoint()
-    assert clusters.count() == n
-    assert clusters.select("cluster_id").distinct().count() == 1
-    ents = canonical_entities(clusters, links, mentions).collect()
+    partials = {k: v.localCheckpoint() for k, v in group_partials(mentions, links).items()}
+    assert partials["texts"].collect()[0]["cnt"] == n
+    assert partials["groups"].count() == 1
+    ents = assign_entities(partials).collect()
     wall = time.time() - t0
     assert len(ents) == 1 and ents[0]["cname"] == "Ukraine"
     assert wall < 120, f"mega-cluster path took {wall:.1f}s"

@@ -89,8 +89,17 @@ def test_takedown_idempotent_and_empty_noop(spark, built):
     urls = _urls_with_rows(spark, built)
     victims = urls[:2]
     takedown_urls(spark, built, victims)  # may be a repeat
+
+    def nodes_files():
+        d = os.path.join(built, "nodes")
+        return {n: os.stat(os.path.join(d, n)).st_mtime_ns for n in os.listdir(d)}
+
+    before = nodes_files()
     again = takedown_urls(spark, built, victims)
     assert all(v == 0 for k, v in again.items() if k != "urls_unmatched"), again
+    # no orphan node: the nodes table is counted, not rewritten
+    assert again["nodes"] == 0
+    assert nodes_files() == before
     # advisor r6 #4: the repeat surfaces that every url matched nothing
     assert again["urls_unmatched"] == len(victims)
     assert takedown_urls(spark, built, []) == {}
