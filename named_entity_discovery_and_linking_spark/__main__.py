@@ -62,17 +62,11 @@ def _parser() -> argparse.ArgumentParser:
                          "partitions under <out>/triples")
     ap.add_argument("--reconcile-every", dest="reconcile_every", type=int,
                     default=None, metavar="N",
-                    help="with --stream: every N micro-batches, recompute "
-                         "the global aida:sameAs closure across ALL batches "
-                         "and rewrite affected partitions (cross-batch "
+                    help="with --stream: every N micro-batches, bring the "
+                         "global aida:sameAs closure across ALL batches up to "
+                         "date and rewrite affected partitions (cross-batch "
                          "canonicalization; per-batch mentions/links persist "
                          "under <out>/_stream_state)")
-    ap.add_argument("--incremental-reconcile", dest="incremental_reconcile",
-                    action="store_true",
-                    help="with --reconcile-every: use the incremental "
-                         "reconciler (group-level state; per-pass reads "
-                         "pruned to new + assignment-changed batches — "
-                         "identical output to the full recompute)")
     ap.add_argument("--query", nargs=2, action="append", metavar=("NAME", "TYPE"),
                     help="one-shot linker probe (repeatable) — the --query REPL "
                          "of linking.py:753-759; prints every ranked candidate")
@@ -246,7 +240,6 @@ def main(argv=None):
             state_dir=(os.path.join(args.out, "_stream_state")
                        if args.reconcile_every else None),
             reconcile_every=args.reconcile_every,
-            incremental=args.incremental_reconcile,
         )
         n = spark.read.parquet(os.path.join(args.out, "triples")).count()
         print(f"done (stream): {n} triples -> {args.out}")

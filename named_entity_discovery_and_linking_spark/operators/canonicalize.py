@@ -15,8 +15,8 @@ groups and keeps the per-group aggregates the vote and the election need;
 ``assign_entities`` runs ``connected_components`` on the contracted graph
 (one node per group root, not per mention) and gives every g1 group its
 cluster's entity.  The partials are mergeable (``merge_partials``), so the
-batch build (``plans.graph.build_graph``), the full stream reconcile and
-the incremental reconciler (``streaming/reconcile.py``), which folds new
+batch build (``plans.graph.build_graph``) and the stream reconciler
+(``streaming/reconcile.py``), which folds new
 batches into stored partials, compute the same assignment.
 
 ``cluster_link_vote`` and ``elect_best_mention`` are A2 and A3 at mention
@@ -213,7 +213,7 @@ def group_partials(mentions: DataFrame, links: DataFrame) -> dict:
 
 def merge_partials(state: dict, delta: dict) -> dict:
     """``group_partials`` of the union of two inputs, from the partials of
-    each: the incremental reconciler's fold of new batches into its state."""
+    each: the stream reconciler's fold of new batches into its state."""
     out = {}
     for name, (keys, aggs) in _MERGE.items():
         both = state[name].unionByName(delta[name])

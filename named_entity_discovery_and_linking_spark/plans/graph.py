@@ -46,7 +46,7 @@ def same_as_triples(mentions: DataFrame, assign: DataFrame, *carry: str) -> Data
     """``aida:sameAs`` rows: NAM mention -> the entity ``assign`` gives its
     (lower(mention), coarse_type) group, plus the mention columns ``carry``
     (a reconcile's ``batch_id``).  The only sameAs emission: the batch
-    build and both stream reconcilers write these rows."""
+    build and the stream reconciler write these rows."""
     return (
         mentions.filter(F.col("category") == "NAM")
         .withColumn("name_norm", F.lower(F.col("mention")))
@@ -103,10 +103,9 @@ def build_graph(mentions: DataFrame, links: DataFrame):
     """Full E3: returns (triples, nodes, edges) DataFrames.
 
     The entity assignment, ``assign_entities(group_partials(mentions,
-    links))``, is computed straight from the whole input (not folded into
-    an empty reconcile state, which adds a re-aggregation per partial) and
-    localCheckpoint()ed once: it feeds the sameAs rows, and through them
-    the edges, and the nodes, the distinct (eid, cname) pairs."""
+    links))``, is computed from the whole input and localCheckpoint()ed
+    once: it feeds the sameAs rows, and through them the edges, and the
+    nodes, the distinct (eid, cname) pairs."""
     assign = assign_entities(group_partials(mentions, links)).localCheckpoint()
     triples = build_triples(mentions, links, assign)
     nodes = assign.select(

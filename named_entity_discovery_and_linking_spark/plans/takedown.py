@@ -18,7 +18,7 @@ the same scale posture:
   of how the build placed its rows.
 * **Stream state** (``_stream_state/mentions``, ``/links`` of a
   ``--stream --reconcile-every`` out dir): rewritten by the same rule.  The
-  incremental reconciler's group-level partials cannot un-fold a removed
+  stream reconciler's group-level partials cannot un-fold a removed
   row, so a takedown that removes one deletes ``_stream_state/reconcile``
   and the next pass folds the remaining batches from scratch.
 * **nodes GC**: nodes carry no url; a node whose every supporting edge
@@ -48,7 +48,7 @@ from pyspark.sql.types import StructType
 from ..sources.fs import get_filesystem
 
 # the per-batch state a ``--stream --reconcile-every`` run keeps under its
-# out dir; its ``reconcile`` subdir holds the incremental reconciler's state
+# out dir; its ``reconcile`` subdir holds the stream reconciler's state
 STREAM_STATE = "_stream_state"
 
 # tables rewritten by url; nodes handled separately (GC pass).  Tables

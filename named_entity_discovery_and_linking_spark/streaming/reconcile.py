@@ -1,25 +1,26 @@
-"""Incremental cross-batch sameAs reconciliation (judge r4 next-round #5)
-plus the stale-leaf tombstone pass (judge r4 next-round #4 / ADVICE r4).
+"""Cross-batch sameAs reconciliation of the stream, plus the stale-leaf
+tombstone pass (judge r4 next-round #4 / ADVICE r4).
 
-``reconcile_triples`` (stream_mentions.py) recomputes the global closure by
-re-reading EVERY persisted batch's mentions+links — correct, idempotent, but
-O(history) per pass.  This module keeps the group partials of
-``operators.canonicalize`` between passes, so each pass reads mention-level
-data only for (a) batches not yet folded into the state and (b) batches
-whose entity assignment actually changed — per-pass input scales with
-distinct entities, not with stream history.
-
-A pass is the batch closure applied to the new batches as one delta:
+One pass, ``reconcile_triples_incremental``, keeps the group partials of
+``operators.canonicalize`` between passes.  A pass is the batch closure
+applied to the new batches (on disk, not yet folded into the state) as one
+delta:
 
   assign = assign_entities(merge_partials(state, group_partials(new batches)))
 
 and ``merge_partials`` re-aggregates min / sum / count / set partials
 exactly, so ``assign`` is ``assign_entities(group_partials(every batch))``,
-the full recompute's — whatever the batches' order and grouping into
-passes.  A mention's sameAs row depends only on its g1 group's entity, so
-only batches containing a group whose assignment CHANGED need their leaf
-partitions rewritten; ``group_batches`` (distinct (group, batch_id)) prunes
-the mention-level re-read to exactly those.
+the batch build's — whatever the batches' order and grouping into passes.
+At version 0 there is no state: the new batches are every batch on disk,
+their partials are the state, and every batch's sameAs leaf is rewritten —
+the full recompute.  ``stream_mentions.reconcile_triples`` is that: a
+state reset (as a takedown does) followed by the pass.
+
+After version 0 a mention's sameAs row depends only on its g1 group's
+entity, so only batches containing a group whose assignment CHANGED need
+their leaf partitions rewritten; ``group_batches`` (distinct (group,
+batch_id)) prunes the mention-level re-read to exactly those, and per-pass
+input scales with distinct entities, not with stream history.
 
 State layout (``<state_dir>/reconcile/v=<K>/``, versioned — the pass writes
 a complete new version then atomically publishes ``_CURRENT`` via the fs
@@ -75,14 +76,9 @@ def _current_version(state_dir: str) -> int:
 
 def _read_state(spark: SparkSession, state_dir: str, version: int):
     fs = get_filesystem(state_dir)
-    out = {}
-    for name, ddl in _STATE_TABLES.items():
-        if version == 0:
-            out[name] = spark.createDataFrame([], ddl)
-        else:
-            path = fs.join(_state_root(state_dir), f"v={version}", name)
-            out[name] = spark.read.schema(ddl).parquet(fs.spark_path(path))
-    return out
+    vdir = fs.join(_state_root(state_dir), f"v={version}")
+    return {name: spark.read.schema(ddl).parquet(fs.spark_path(fs.join(vdir, name)))
+            for name, ddl in _STATE_TABLES.items()}
 
 
 def _persist_state(state: dict, state_dir: str, version: int) -> None:
@@ -106,16 +102,14 @@ def _persist_state(state: dict, state_dir: str, version: int) -> None:
     fs.write_atomic(fs.join(_state_root(state_dir), "_CURRENT"), str(version))
 
 
-def _on_disk_batches(state_dir: str, table: str) -> set[int]:
-    fs = get_filesystem(state_dir)
-    path = fs.join(state_dir, table)
-    if not fs.exists(path):
-        return set()
-    out = set()
-    for entry in fs.listdir(path):
+def _batch_dirs(path: str) -> dict[int, str]:
+    """The ``batch_id=<int>`` partition dirs under ``path``: id -> dir name."""
+    fs = get_filesystem(path)
+    out = {}
+    for entry in fs.listdir(path) if fs.exists(path) else ():
         if entry.startswith("batch_id="):
             try:
-                out.add(int(entry.split("=", 1)[1]))
+                out[int(entry.split("=", 1)[1])] = entry
             except ValueError:
                 pass
     return out
@@ -129,16 +123,8 @@ def drop_stale_sameas_leaves(triples_dir: str, live_batches: set[int]) -> list[i
     batch_id is not in ``live_batches`` (the batches the new closure
     actually wrote).  Returns the batch ids whose leaves were dropped."""
     fs = get_filesystem(triples_dir)
-    if not fs.exists(triples_dir):
-        return []
     dropped = []
-    for entry in fs.listdir(triples_dir):
-        if not entry.startswith("batch_id="):
-            continue
-        try:
-            bid = int(entry.split("=", 1)[1])
-        except ValueError:
-            continue
+    for bid, entry in _batch_dirs(triples_dir).items():
         if bid in live_batches:
             continue
         bdir = fs.join(triples_dir, entry)
@@ -150,39 +136,44 @@ def drop_stale_sameas_leaves(triples_dir: str, live_batches: set[int]) -> list[i
     return dropped
 
 
+def reset_state(state_dir: str) -> None:
+    """Delete the stored state: the next pass starts from version 0."""
+    get_filesystem(state_dir).rmtree(_state_root(state_dir))
+
+
 def reconcile_triples_incremental(
     spark: SparkSession, triples_dir: str, state_dir: str,
 ) -> dict:
-    """One incremental reconcile pass.  Returns a small stats dict
-    (new_batches, changed_groups, rewritten_batches, dropped_leaves) so
-    callers and tests can see what the pass actually touched.
+    """The reconcile pass.  Returns a small stats dict (new_batches,
+    changed_groups, rewritten_batches, dropped_leaves) so callers and tests
+    can see what the pass actually touched.
 
-    Output-identical to ``reconcile_triples`` (the full recompute) — pinned
-    by test_incremental_reconcile_matches_full — but mention-level reads are
-    partition-pruned to new + assignment-changed batches."""
+    At version 0 (no stored state) the new batches are every batch on disk:
+    their partials are the state, and every batch is rewritten.  Later
+    passes fold the new batches into the stored partials and re-read
+    mentions only of new + assignment-changed batches."""
     t0 = time.time()
     fs = get_filesystem(state_dir)
     version = _current_version(state_dir)
-    state = _read_state(spark, state_dir, version)
-
-    done = {r["batch_id"] for r in state["done"].collect()}
-    on_disk = _on_disk_batches(state_dir, "mentions")
+    state = _read_state(spark, state_dir, version) if version else None
+    done = {r["batch_id"] for r in state["done"].collect()} if state else set()
+    on_disk = set(_batch_dirs(fs.join(state_dir, "mentions")))
     new_batches = sorted(on_disk - done)
 
-    mentions_path = fs.spark_path(fs.join(state_dir, "mentions"))
-    links_path = fs.spark_path(fs.join(state_dir, "links"))
+    def read(table: str, batches):
+        return spark.read.parquet(fs.spark_path(fs.join(state_dir, table))).filter(
+            F.col("batch_id").isin(batches))
 
-    merged = {k: v for k, v in state.items() if k not in ("assign", "done")}
+    merged = {k: v for k, v in (state or {}).items() if k not in ("assign", "done")}
     if new_batches:
-        new_m = spark.read.parquet(mentions_path).filter(
-            F.col("batch_id").isin(new_batches))
-        new_l = spark.read.parquet(links_path).filter(
-            F.col("batch_id").isin(new_batches))
-        merged.update(merge_partials(state, group_partials(new_m, new_l)))
-        merged["group_batches"] = merged["group_batches"].unionByName(
-            new_m.filter(F.col("category") == "NAM")
-            .select(F.lower(F.col("mention")).alias("name_norm"), "coarse_type", "batch_id")
-        ).distinct()
+        new_m = read("mentions", new_batches)
+        delta = group_partials(new_m, read("links", new_batches))
+        batches = new_m.filter(F.col("category") == "NAM").select(
+            F.lower(F.col("mention")).alias("name_norm"), "coarse_type", "batch_id")
+        if state is not None:
+            delta = merge_partials(state, delta)
+            batches = state["group_batches"].unionByName(batches)
+        merged = {**delta, "group_batches": batches.distinct()}
     # checkpoint the merged state once: assign + persist + change-detection
     # all fan out from these frames.  Lazy (eager=False) so materialization
     # rides the first consuming job instead of paying six dedicated
@@ -191,28 +182,32 @@ def reconcile_triples_incremental(
 
     assign = assign_entities(merged).select(*G1, "eid").localCheckpoint()
 
-    prev = state["assign"]
-    changed_groups = (
-        assign.withColumnRenamed("eid", "new_eid")
-        .join(prev.withColumnRenamed("eid", "old_eid"), G1, "full_outer")
-        .filter(
-            F.col("new_eid").isNull() | F.col("old_eid").isNull()
-            | (F.col("new_eid") != F.col("old_eid"))
+    if state is None:
+        # every group is new, so every batch on disk is affected
+        n_changed = assign.count()
+        affected = on_disk
+    else:
+        changed_groups = (
+            assign.withColumnRenamed("eid", "new_eid")
+            .join(state["assign"].withColumnRenamed("eid", "old_eid"), G1, "full_outer")
+            .filter(
+                F.col("new_eid").isNull() | F.col("old_eid").isNull()
+                | (F.col("new_eid") != F.col("old_eid"))
+            )
+            .select(*G1)
+            .localCheckpoint()
         )
-        .select(*G1)
-        .localCheckpoint()
-    )
-    affected = {
-        r["batch_id"]
-        for r in merged["group_batches"].join(changed_groups, G1)
-        .select("batch_id").distinct().collect()
-    } | set(new_batches)
+        n_changed = changed_groups.count()
+        affected = {
+            r["batch_id"]
+            for r in merged["group_batches"].join(changed_groups, G1)
+            .select("batch_id").distinct().collect()
+        } | set(new_batches)
 
     rewritten: set[int] = set()
     if affected:
-        m = spark.read.parquet(mentions_path).filter(
-            F.col("batch_id").isin(sorted(affected)))
-        t_same = same_as_triples(m, assign, "batch_id").localCheckpoint()
+        t_same = same_as_triples(read("mentions", sorted(affected)), assign,
+                                 "batch_id").localCheckpoint()
         write_table(t_same, triples_dir, partition_by=["batch_id", "pred"])
         rewritten = {r["batch_id"] for r in
                      t_same.select("batch_id").distinct().collect()}
@@ -221,7 +216,6 @@ def reconcile_triples_incremental(
     dropped = drop_stale_sameas_leaves(
         triples_dir, (on_disk - affected) | rewritten)
 
-    n_changed = changed_groups.count()
     state_out = dict(merged)
     state_out["assign"] = assign
     state_out["done"] = spark.createDataFrame(

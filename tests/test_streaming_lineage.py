@@ -634,7 +634,7 @@ def test_stream_cli_mode(spark, tmp_path, capsys):
     r = subprocess.run(
         [sys.executable, "-m", "named_entity_discovery_and_linking_spark",
          "--stream", "--pages", in_dir, "--out", str(out_dir),
-         "--reconcile-every", "1", "--incremental-reconcile"],
+         "--reconcile-every", "1"],
         capture_output=True, text=True, timeout=600,
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
@@ -833,6 +833,40 @@ def test_reconcile_drops_zero_sameas_stale_leaf(spark, tmp_path, incremental):
     t = spark.read.parquet(triples).filter("pred = 'aida:sameAs'")
     assert {r["batch_id"] for r in t.select("batch_id").distinct().collect()} == {0}
     assert t.filter("obj = 'kb:GONE'").count() == 0
+
+
+def test_full_reconcile_ignores_stored_state(spark, tmp_path):
+    """reconcile_triples recomputes from the persisted batches, not from a
+    stored state: after an incremental pass folded batch 0 with its
+    mentions linked to kb:E1, batch 0 is replayed with the same mentions
+    linked to kb:E2 (as after a KB change), and the full reconcile then
+    writes sameAs rows to kb:E2 only."""
+    from named_entity_discovery_and_linking_spark.streaming.reconcile import (
+        reconcile_triples_incremental,
+    )
+    from named_entity_discovery_and_linking_spark.streaming.stream_mentions import (
+        reconcile_triples,
+    )
+
+    state = str(tmp_path / "state")
+    triples = str(tmp_path / "triples")
+
+    def batch0(eid):
+        _state_rows(spark, state, [
+            (0, "u0", "m0", "NAM", "Acme Corp", "ORG", eid, 0.9),
+            (0, "u0", "m1", "NAM", "Acme Corp", "ORG", eid, 0.8),
+        ], [])
+
+    def sameas_objs():
+        t = spark.read.parquet(triples).filter("pred = 'aida:sameAs'")
+        return {r["obj"] for r in t.select("obj").distinct().collect()}
+
+    batch0("kb:E1")
+    reconcile_triples_incremental(spark, triples, state)
+    assert sameas_objs() == {"kb:E1"}
+    batch0("kb:E2")
+    reconcile_triples(spark, triples, state)
+    assert sameas_objs() == {"kb:E2"}
 
 
 def test_incremental_reconcile_matches_full_and_prunes(spark, tmp_path, halves):
