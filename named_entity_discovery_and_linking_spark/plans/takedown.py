@@ -25,6 +25,17 @@ the same scale posture:
   was removed is an orphan.  One left-anti count against the surviving
   edges' dst set finds the orphans, and ``nodes`` is rewritten (left-semi
   join, tmp + swap) only when there is one.
+* **Concurrency**: the url tables do not depend on each other, so each
+  table's read, accounting scan, reconcile-state reset and rewrite + swap
+  run as one task on a driver thread pool, one thread per table present
+  (a takedown of tiny tables is job latency, which the threads overlap).
+  The tasks inherit the caller's local properties (job group, labels).
+  The claim is held until every task has ended; a task's error is raised
+  after every task has ended, and the claim is still released.  Each
+  stream-state task deletes ``_stream_state/reconcile`` before it
+  rewrites a row (a second delete is a no-op).  The nodes GC and the
+  N-Triples regeneration read the rewritten ``edges`` and ``triples``, so
+  they run after the pool, on the calling thread.
 
 The takedown set rides an IN-set filter everywhere (it is a bounded
 control-plane set read on the driver, like the lineage bucket ids).  A claim file fences
@@ -39,11 +50,14 @@ exists, so the removal is auditable.
 from __future__ import annotations
 
 import time
+from collections import Counter
+from concurrent.futures import ThreadPoolExecutor
 from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from ..sources.fs import get_filesystem
 
@@ -115,6 +129,42 @@ def _gc_nodes(spark: SparkSession, fs, nodes_path: str, edges_path: str) -> int:
     return n_orphans
 
 
+def _takedown_table(spark: SparkSession, fs, out_dir: str, table: str,
+                    hit: F.Column) -> tuple[Counter, int]:
+    """Remove the rows matching ``hit`` from the url table ``table``.
+    Returns the removed rows per matched url and the number of partition
+    dirs rewritten."""
+    path = fs.join(out_dir, table)
+    per_url: Counter = Counter()
+    # Spark's rule: an entry starting with "_" or "." is no data.  A table
+    # with nothing else (a stage that wrote no row) has nothing to remove
+    # and no schema to read.
+    if not any(not n.startswith(("_", ".")) for n in fs.listdir(path)):
+        return per_url, 0
+    df = spark.read.parquet(fs.spark_path(path))
+    if "url" not in df.columns:
+        return per_url, 0
+    # per-url match accounting (advisor r6 #4): a requested url that
+    # normalize_url would collapse differently matches nothing — surface
+    # that instead of silently removing zero rows.  The same scan finds the
+    # dirs to rewrite.  Bounded: one row per request url and dir.
+    leaves = set()
+    for r in (
+        df.filter(hit).groupBy("url", _leaf_dir(table).alias("leaf"))
+        .count().collect()
+    ):
+        per_url[r["url"]] += r["count"]
+        leaves.add(tuple(unquote(c) for c in r["leaf"].split("/")[1:]))
+    if leaves:
+        if table.startswith(STREAM_STATE):
+            # dropped before the rows, so a rerun after a crash drops it
+            fs.rmtree(fs.join(out_dir, STREAM_STATE, "reconcile"))
+        # a null url matches no takedown url: its row stays
+        _rewrite_leaves(spark, fs, path, df.schema, sorted(leaves),
+                        ~F.coalesce(hit, F.lit(False)))
+    return per_url, len(leaves)
+
+
 def takedown_urls(spark: SparkSession, out_dir: str, urls: list[str]) -> dict:
     """Remove every row derived from ``urls`` from the materialized tables
     under ``out_dir``.  Returns ``{table: rows_removed}`` (tables missing
@@ -143,40 +193,18 @@ def takedown_urls(spark: SparkSession, out_dir: str, urls: list[str]) -> dict:
     removed: dict[str, int] = {}
     n_dirs = 0
     try:
-        for table in URL_TABLES:
-            path = fs.join(out_dir, table)
-            if not fs.exists(path):
-                continue
-            # Spark's rule: an entry starting with "_" or "." is no data.  A
-            # table with nothing else (a stage that wrote no row) has
-            # nothing to remove and no schema to read.
-            df = (spark.read.parquet(fs.spark_path(path)) if any(
-                not n.startswith(("_", ".")) for n in fs.listdir(path)) else None)
-            removed[table] = 0
-            if df is None or "url" not in df.columns:
-                continue
-            # per-url match accounting (advisor r6 #4): a requested url that
-            # normalize_url would collapse differently matches nothing —
-            # surface that instead of silently removing zero rows.  The same
-            # scan finds the dirs to rewrite.  Bounded: one row per request
-            # url and dir.
-            leaves = set()
-            for r in (
-                df.filter(hit).groupBy("url", _leaf_dir(table).alias("leaf"))
-                .count().collect()
-            ):
-                per_url[r["url"]] += r["count"]
-                removed[table] += r["count"]
-                leaves.add(tuple(unquote(c) for c in r["leaf"].split("/")[1:]))
-            if not leaves:
-                continue
-            if table.startswith(STREAM_STATE):
-                # dropped before the rows, so a rerun after a crash drops it
-                fs.rmtree(fs.join(out_dir, STREAM_STATE, "reconcile"))
-            # a null url matches no takedown url: its row stays
-            _rewrite_leaves(spark, fs, path, df.schema, sorted(leaves),
-                            ~F.coalesce(hit, F.lit(False)))
-            n_dirs += len(leaves)
+        tables = [t for t in URL_TABLES if fs.exists(fs.join(out_dir, t))]
+        # wrapped here, so the tasks capture this thread's local properties
+        task = inheritable_thread_target(spark)(_takedown_table)
+        with ThreadPoolExecutor(max_workers=max(len(tables), 1)) as pool:
+            futures = [pool.submit(task, spark, fs, out_dir, t, hit) for t in tables]
+        # every task has ended here; the first failed table's error is raised
+        for table, fut in zip(tables, futures):
+            counts, dirs = fut.result()
+            for url, n in counts.items():
+                per_url[url] += n
+            removed[table] = sum(counts.values())
+            n_dirs += dirs
         nodes_path = fs.join(out_dir, "nodes")
         edges_path = fs.join(out_dir, "edges")
         if fs.exists(nodes_path) and fs.exists(edges_path):
@@ -188,16 +216,17 @@ def takedown_urls(spark: SparkSession, out_dir: str, urls: list[str]) -> dict:
         tri_path = fs.join(out_dir, "triples")
         if fs.exists(nt_path) and fs.exists(tri_path):
             from ..sources.io import write_ntriples
+            from .metrics import observe
 
             n_nt_before = spark.read.text(fs.spark_path(nt_path)).count()
             tmp_nt = nt_path.rstrip("/") + ".__takedown_tmp"
             fs.rmtree(tmp_nt)
-            write_ntriples(
-                spark.read.parquet(fs.spark_path(tri_path)), fs.spark_path(tmp_nt)
-            )
-            n_nt_after = spark.read.text(fs.spark_path(tmp_nt)).count()
+            # one line per triples row: the write counts the new export
+            triples, seen = observe(spark.read.parquet(fs.spark_path(tri_path)),
+                                    "takedown_ntriples", F.count(F.lit(1)).alias("n"))
+            write_ntriples(triples, fs.spark_path(tmp_nt))
             _swap_dirs(fs, nt_path, tmp_nt)
-            removed["triples_nt"] = n_nt_before - n_nt_after
+            removed["triples_nt"] = n_nt_before - seen.get["n"]
     finally:
         fs.break_claim_if(claim, "takedown")
 

@@ -81,16 +81,21 @@ def _read_state(spark: SparkSession, state_dir: str, version: int):
             for name, ddl in _STATE_TABLES.items()}
 
 
-def _persist_state(state: dict, state_dir: str, version: int) -> None:
+def _persist_state(spark: SparkSession, state: dict, state_dir: str,
+                   version: int) -> None:
     # the 8 single-file writes are independent jobs — submit them
     # concurrently so the pass pays max(write) not sum(write) of local-mode
     # per-job latency (Spark job submission is thread-safe; the scheduler
-    # interleaves them across cores)
+    # interleaves them across cores).  The wrapper carries the caller's
+    # local properties (a stream query's job group, labels) to the threads.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
 
     fs = get_filesystem(state_dir)
     vdir = fs.join(_state_root(state_dir), f"v={version}")
 
+    @inheritable_thread_target(spark)
     def write(item):
         name, df = item
         df.coalesce(1).write.mode("overwrite").parquet(
@@ -220,7 +225,7 @@ def reconcile_triples_incremental(
     state_out["assign"] = assign
     state_out["done"] = spark.createDataFrame(
         [(int(b),) for b in sorted(on_disk)], _STATE_TABLES["done"])
-    _persist_state(state_out, state_dir, version + 1)
+    _persist_state(spark, state_out, state_dir, version + 1)
     stats = {
         "new_batches": new_batches,
         "changed_groups": n_changed,

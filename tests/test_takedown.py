@@ -224,3 +224,78 @@ def test_rebuild_after_takedown_drops_under_threshold_promotion(spark, tmp_path)
         (F.col("subcomponent") == 1) & (F.col("eid") == eid)
     ).count() == 0, "rebuild retained an under-threshold promotion"
     assert links.filter(F.col("url") == victim).count() == 0, "resurrected"
+
+
+def _jobs_in_group(spark, group, action):
+    """Run ``action`` under job group ``group``; returns (jobs it ran
+    outside any group, jobs of ``group``)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    listeners = sc._jsc.sc().listenerBus()
+    listeners.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    listeners.waitUntilEmpty()
+    return (set(tracker.getJobIdsForGroup(None)) - before,
+            len(tracker.getJobIdsForGroup(group)))
+
+
+def test_pool_jobs_keep_the_callers_job_group(spark, built, tmp_path):
+    """The takedown's per-table threads and the reconcile state writes run
+    their jobs in the caller's job group (a stream query's group, a
+    traced run's span label are local properties, lost on a plain
+    thread)."""
+    import shutil
+
+    from named_entity_discovery_and_linking_spark.streaming.reconcile import _persist_state
+
+    out = str(tmp_path / "out")
+    # without the curated table another test adds, so the job count is
+    # the same whatever tests ran before
+    shutil.copytree(built, out, ignore=shutil.ignore_patterns("curated"))
+    victims = _urls_with_rows(spark, out)[:2]
+    ungrouped, n_group = _jobs_in_group(
+        spark, "takedown-pool", lambda: takedown_urls(spark, out, victims))
+    assert not ungrouped
+    # the tables one at a time, this takedown runs 26 jobs: the pool adds none
+    assert 0 < n_group <= 26
+
+    state = {name: spark.range(1) for name in ("a", "b", "c")}
+    ungrouped, n_group = _jobs_in_group(
+        spark, "persist-state",
+        lambda: _persist_state(spark, state, str(tmp_path / "state"), 1))
+    assert not ungrouped
+    assert n_group == len(state)
+
+
+def test_failing_table_task_releases_claim_and_reruns(spark, built, tmp_path):
+    """A table task that fails (a corrupt links file) fails the takedown
+    after the other tasks end, releases the claim, and a rerun once the
+    file is gone leaves no row of the urls in any url table (crash-rerun
+    idempotence)."""
+    import shutil
+
+    from named_entity_discovery_and_linking_spark.plans.takedown import URL_TABLES
+
+    out = str(tmp_path / "out")
+    shutil.copytree(built, out)
+    victims = _urls_with_rows(spark, out)[:2]
+    corrupt = os.path.join(out, "links", "part-99999-corrupt.parquet")
+    with open(corrupt, "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        takedown_urls(spark, out, victims)
+    assert not os.path.exists(os.path.join(out, ".__takedown_claim"))
+
+    os.remove(corrupt)
+    takedown_urls(spark, out, victims)
+    for t in URL_TABLES:
+        if os.path.exists(os.path.join(out, t)):
+            df = spark.read.parquet(f"{out}/{t}")
+            if "url" in df.columns:
+                assert df.filter(F.col("url").isin(victims)).count() == 0, t
